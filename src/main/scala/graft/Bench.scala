@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
@@ -13,12 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.local(32, shufflePartitions = Some(32))
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -44,16 +39,15 @@ object Bench {
     // position. A query that throws reports the -1 sentinel (and is
     // excluded from the total) instead of folding its abort time into a
     // silently-faster sum.
-    def timedPass(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-        : Seq[(String, Double)] = qs.map { case (name, fn) =>
+    def timed(name: String)(df: => DataFrame): Double = {
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      try { df.write.format("noop").mode("overwrite").save(); (System.nanoTime() - t0) / 1e9 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
+      }
     }
+    def timedPass(qs: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[(String, Double)] =
+      qs.map { case (name, fn) => name -> timed(name)(fn(spark, sfDir)) }
     // drop caches the warmup populated (minhash/jaccard pin their
     // signature frames) so timed passes measure full computation
     graft.ops.InternalCaches.drainAll(spark)
@@ -78,13 +72,7 @@ object Bench {
     }
     def stressPass(): Map[String, Double] = stress.map { case (name, fn) =>
       graft.ops.InternalCaches.drainAll(spark)
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn().write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-        }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      name -> timed(name)(fn())
     }.toMap
     graft.ops.InternalCaches.drainAll(spark)
     // min-of-3 for the stress section (vs min-of-2 for the catalog): the

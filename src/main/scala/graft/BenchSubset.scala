@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused timing for a subset of catalog queries — min-of-2 warm through
   * the noop sink, same methodology as [[Bench]], for iterating on one
   * operator family without paying the full-catalog run.
@@ -49,30 +47,12 @@ object BenchSubset {
     }
   }
 
-  /** Deterministic listener-bus drain (ADVICE r11): wait for the async
-    * bus to deliver every posted event before reading census state, so
-    * late job-end events can't bleed into another query's durations and
-    * no fixed sleep pads the wall. `listenerBus` is private[spark] in
-    * source but public in bytecode — reflection, acceptable for a
-    * diagnostic-only tool. */
-  private def waitBusEmpty(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(5000L)): Unit
-    } catch { case _: Exception => Thread.sleep(300) }
-
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_CPUS mirrors Bench's core-count seam (r16 verdict item 1:
-    // census the 8-vs-32 contention rows at both counts)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
+    // SPARK_GRAFT_CPUS sets the core count, as in Bench, so the 8-vs-32
+    // contention rows can be censused at both counts
+    val spark = GraftSession.local(32, shufflePartitions = Some(32))
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "false"))
-      .config("spark.ui.enabled", "false").getOrCreate()
+        sys.env.getOrElse("SPARK_GRAFT_CACHE_AQE", "false")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val census =
@@ -95,12 +75,12 @@ object BenchSubset {
     val t2 = names.map { n =>
       // discard queued job-end durations from the warm/t1 passes so the
       // census drain below holds exactly this run's jobs
-      census.foreach { c => waitBusEmpty(spark); c.drainDurations(): Unit }
+      census.foreach { c => GraftSession.drainListenerBus(spark); c.drainDurations(): Unit }
       val b = census.map(_.snapshot())
       val t = once(n)
       (census, b) match {
         case (Some(c), Some((j0, s0, k0))) =>
-          waitBusEmpty(spark)
+          GraftSession.drainListenerBus(spark)
           val (j1, s1, k1) = c.snapshot()
           println(f"$n%-28s census: ${j1 - j0}%3d jobs ${s1 - s0}%4d stages ${k1 - k0}%6d tasks")
           c.drainDurations().sortBy(-_._1).take(40).foreach { case (s, d) =>

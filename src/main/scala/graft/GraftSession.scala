@@ -39,4 +39,35 @@ object GraftSession {
     autoBroadcastMb.fold(b1)(mb =>
       b1.config("spark.sql.autoBroadcastJoinThreshold", mb * 1024L * 1024L))
   }
+
+  /** Plain session for a tool main: `local[n]` with `n` = [[cpus]], UTC,
+    * no UI; `shufflePartitions` defaults to `n`. */
+  def local(defaultCpus: Int, shufflePartitions: Option[Int] = None): SparkSession.Builder = {
+    val n = cpus(defaultCpus)
+    SparkSession.builder().master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(n).toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+  }
+
+  /** Block until the async listener bus has delivered every event posted
+    * so far (bounded wait), so listener state read next is complete — no
+    * fixed sleep pads the wall. `listenerBus` is private[spark] in source
+    * but public in bytecode, hence the reflection. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    try {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(5000L)): Unit
+    } catch { case _: Exception => Thread.sleep(300) }
+
+  /** Task slots: `SPARK_GRAFT_CPUS`, or `default` when unset. Anything but
+    * a positive integer fails naming the variable. */
+  def cpus(default: Int, env: collection.Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(default) { v =>
+      val n = v.toIntOption.filter(_ > 0)
+      require(n.nonEmpty, s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
+      n.get
+    }
 }

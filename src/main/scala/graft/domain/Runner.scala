@@ -1,9 +1,8 @@
 package graft.domain
 
 import graft.ops.{Relational, Upsert}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.InternalCaches.CacheSyntax
 
 /** Incremental pipeline runner (SURVEY §2.10 / §7.1 step 6): the
   * reference's `asof`-watermark orchestration as a small library.
@@ -13,6 +12,9 @@ import graft.ops.InternalCaches.CacheSyntax
   *   the catalog schema → idempotent keyed merge → atomic swap.
   * Replaying a batch is a no-op by construction (upsert semantics), which
   * is the whole crash-recovery story: re-run the window, nothing breaks.
+  *
+  * One pass: [[upsert]]'s row count rides on its single write as a
+  * `Dataset.observe` metric — no cache, no second `count()` job.
   *
   * Storage note: the tmp-write + directory-swap below is the plain-parquet
   * stand-in for a lakehouse table format's atomic commit (Delta/Iceberg
@@ -34,24 +36,25 @@ class Runner(spark: SparkSession, storeDir: String) {
   }
 
   /** High watermark of `tsCol` in the stored table (null when empty) —
-    * the reference's `SELECT MAX(created_dt)` resume point. */
-  def watermark(table: String, tsCol: String): Option[java.sql.Timestamp] = {
-    val r = state(table).agg(max(col(tsCol))).collect()(0)
-    Option(r.get(0)).map(_.asInstanceOf[java.sql.Timestamp])
-  }
+    * the reference's `SELECT MAX(created_dt)` resume point, read as a
+    * descending top-1 (nulls last): the same value as `max` in one job,
+    * where a global aggregate takes a shuffle and a second job. */
+  def watermark(table: String, tsCol: String): Option[java.sql.Timestamp] =
+    state(table).select(col(tsCol)).orderBy(col(tsCol).desc_nulls_last).head(1)
+      .headOption.flatMap(r => Option(r.get(0))).map(_.asInstanceOf[java.sql.Timestamp])
 
   /** Conform `batch` to the catalog and merge it into the stored table on
     * the table's natural keys; atomic tmp-write + swap. Returns the new
     * row count. */
   def upsert(table: String, batch: DataFrame): Long = {
-    val merged = Upsert
+    val rows = Observation()
+    val tmp = path(table) + "__tmp"
+    Upsert
       .merge(state(table), Relational.conformTo(batch, Schemas.of(table)),
         Schemas.keys(table))
-      .cacheRegistered
-    val n = merged.count()
-    val tmp = path(table) + "__tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    merged.unpersist()
+      .observe(rows, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(tmp)
+    val n = rows.get("n").asInstanceOf[Long]
     val target = new java.io.File(path(table))
     def renameOrFail(from: java.io.File, to: java.io.File): Unit =
       if (!from.renameTo(to))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Upsert (SURVEY §2.2 K1; reference `helpers/load_helpers.py:4-39` —
@@ -24,8 +25,8 @@ import org.apache.spark.sql.functions._
   *     a parquet-backed fake in tests). Parquet/lakehouse targets instead
   *     rewrite via `merge(current, updates, keys).write` (Runner.upsert).
   *
-  * Scale: one shuffle of each side on the key columns; the anti-join and
-  * the union reuse the same hash partitioning. Idempotent by construction:
+  * Scale: both sides, unioned, shuffle once on the key columns into one
+  * window; each input is scanned once. Idempotent by construction:
   * merge(merge(t, u), u) == merge(t, u)  (property-tested).
   */
 object Upsert {
@@ -34,11 +35,16 @@ object Upsert {
     * Default tiebreak = every non-key column: with duplicate keys in the
     * batch the survivor must still be a deterministic function of the row
     * multiset, or replays stop being no-ops (keys alone tie on every row).
-    * Shared by [[merge]] and [[viaTempTable]] — a staged batch with
-    * duplicate keys would make the single ON CONFLICT statement illegal
-    * ("cannot affect row a second time" on PostgreSQL). */
+    * Its order is shared with [[merge]]; [[viaTempTable]] stages it — a
+    * staged batch with duplicate keys would make the single ON CONFLICT
+    * statement illegal ("cannot affect row a second time" on PostgreSQL). */
   def dedupLatest(updates: DataFrame, keys: Seq[String],
-                  updateTiebreak: Seq[Column] = Nil): DataFrame = {
+                  updateTiebreak: Seq[Column] = Nil): DataFrame =
+    Relational.dedupByKeys(updates, keys, latestFirst(updates, keys, updateTiebreak))
+
+  /** Descending order that puts the winning update row first. */
+  private def latestFirst(updates: DataFrame, keys: Seq[String],
+                          updateTiebreak: Seq[Column]): Seq[Column] = {
     val tb =
       if (updateTiebreak.nonEmpty) updateTiebreak
       else {
@@ -51,17 +57,34 @@ object Upsert {
           .map(f => col(f.name)).toSeq
         if (orderable.nonEmpty) orderable else keys.map(col)
       }
-    Relational.dedupByKeys(updates, keys, tb.map(_.desc))
+    tb.map(_.desc)
   }
 
+  /** Post-upsert state `(current anti-join dedupLatest(updates)) ∪
+    * dedupLatest(updates)`, as one window over the tagged union that ranks
+    * update rows (tag 2) first per key. A current row survives when no
+    * update shares its key, or when a key column is null (the anti-join
+    * never matches a null key; the window groups them, so it is said
+    * explicitly). Columns only in `updates` are dropped; an explicit
+    * tiebreak may order on them. */
   def merge(
       current: DataFrame,
       updates: DataFrame,
       keys: Seq[String],
       updateTiebreak: Seq[Column] = Nil): DataFrame = {
-    val upd = dedupLatest(updates, keys, updateTiebreak)
-    val kept = current.join(upd.select(keys.map(col): _*), keys, "left_anti")
-    kept.unionByName(upd.select(current.columns.map(col).toSeq: _*))
+    val (tag, top, rn) = ("__upsert_tag", "__upsert_top", "__upsert_rn")
+    val byKey = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(tag).desc +: latestFirst(updates, keys, updateTiebreak): _*)
+    val nullKey = keys.map(col(_).isNull).foldLeft(lit(false))(_ || _)
+    current.withColumn(tag, lit(1))
+      .unionByName(updates.withColumn(tag, lit(2)), allowMissingColumns = true)
+      .withColumn(top, max(tag).over(
+        byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn(rn, row_number().over(byKey))
+      .filter(
+        (col(tag) === 1 && (col(top) === 1 || nullKey)) ||
+          (col(tag) === 2 && col(rn) === 1))
+      .select(current.columns.map(col).toSeq: _*)
   }
 
   /** Transport seam for [[viaTempTable]]: production = [[JdbcUpsertSink]];

@@ -27,6 +27,7 @@ object DecodeBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("data/fixtures")
     val iters = args.lift(1).map(_.toInt).getOrElse(20000)
+    require(iters > 0, s"iters must be positive, got $iters")
     val jpegs = Seq("dct_gray.jpg", "dct_rgb444.jpg", "dct_rgb420.jpg",
       "dct_rst.jpg").map(load(dir, _))
     val pngs = Seq("gradient.png", "gray.png", "rgba.png").map(load(dir, _))

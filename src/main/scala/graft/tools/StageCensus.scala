@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: per-STAGE census of one catalog query's second (warm) run —
   * stage callsite, duration, task count and shuffle bytes. The job-level
   * census (BenchSubset) is opaque under AQE (every materialization reads
@@ -37,14 +35,9 @@ object StageCensus {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    // SPARK_GRAFT_CPUS mirrors Bench's core-count seam so the 8-vs-32
-    // scaling contention rows can be censused at BOTH counts (r16 verdict
-    // item 1); shuffle partitions stay pinned at 32 like the driver bench
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // SPARK_GRAFT_CPUS sets the core count, as in Bench; shuffle
+    // partitions stay pinned at 32 like the bench
+    val spark = graft.GraftSession.local(32, shufflePartitions = Some(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def once(): Double = {
       val t0 = System.nanoTime()
@@ -57,13 +50,7 @@ object StageCensus {
     val l = new Stages
     spark.sparkContext.addSparkListener(l)
     val t = once()
-    // drain the async bus so every stage-completed event is in
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(5000L)): Unit
-    } catch { case _: Exception => Thread.sleep(300) }
+    graft.GraftSession.drainListenerBus(spark) // every stage-completed event is in
     println(f"$name wall ${t}%.2f s — stages by duration:")
     import scala.jdk.CollectionConverters._
     l.done.asScala.toSeq.sortBy(-_._1).take(30).foreach {

@@ -1,0 +1,19 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+class GraftSessionSpec extends AnyFunSuite {
+
+  test("cpus: SPARK_GRAFT_CPUS when set, the default when unset") {
+    assert(GraftSession.cpus(4, Map.empty) == 4)
+    assert(GraftSession.cpus(32, Map("SPARK_GRAFT_CPUS" -> "8")) == 8)
+  }
+
+  test("cpus: anything but a positive integer fails naming the variable") {
+    for (bad <- Seq("0", "-2", "four", "", " 8", "8.0")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.cpus(4, Map("SPARK_GRAFT_CPUS" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
+    }
+  }
+}

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{AsofJoin, Relational, Upsert}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -38,6 +39,51 @@ class PropertySpec extends SparkSpec {
         twice.orderBy("k", "seq", "v").collect().toSeq, s"seed=$seed")
       val keys = once.select("k").as[Int].collect().toSet
       assert(keys == (baseL.map(_._1).toSet ++ updL.map(_._1).toSet), s"seed=$seed")
+    }
+  }
+
+  /** The anti-join + union definition `Upsert.merge` replaced, kept as
+    * the reference: current rows whose key no update matches (a null key
+    * never matches), plus the deduped batch projected to `current`. */
+  private def mergeByAntiJoin(current: DataFrame, updates: DataFrame,
+                              keys: Seq[String], tiebreak: Seq[Column] = Nil) = {
+    val upd = Upsert.dedupLatest(updates, keys, tiebreak)
+    current.join(upd.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(upd.select(current.columns.map(col).toSeq: _*))
+  }
+
+  test("upsert: one-window merge equals the anti-join + union definition") {
+    val nullable = (g: Gen[Int]) => Gen.frequency(1 -> Gen.const(None), 4 -> g.map(Some(_)))
+    val rowsGen = Gen.listOfN(25, for {
+      k1 <- nullable(Gen.choose(0, 6)) // small key space → duplicate keys
+      k2 <- Gen.frequency(1 -> Gen.const(None), 4 -> Gen.oneOf("x", "y").map(Some(_)))
+      seq <- Gen.choose(0, 3)          // few values → tiebreak ties
+      v <- Gen.oneOf("a", "b", "c")
+    } yield (k1, k2, seq, v))
+    val emptyCurrent = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("k1", IntegerType), StructField("k2", StringType),
+        StructField("seq", IntegerType), StructField("v", StringType))))
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (seed <- 1L to 4L) {
+      val cur = sample(rowsGen, seed).toDF("k1", "k2", "seq", "v")
+      val batchL = sample(rowsGen, seed + 100)
+      val batch = batchL.toDF("k1", "k2", "seq", "v")
+      // batch-only columns: `extra` must be dropped, `bseq` is a unique
+      // per-row tiebreak (the default all-column tiebreak may tie)
+      val wide = batchL.zipWithIndex.map { case ((k1, k2, sq, v), i) => (k1, k2, sq, v, i, s"e$i") }
+        .toDF("k1", "k2", "seq", "v", "bseq", "extra")
+      val cases = Seq(
+        ("single key", cur, batch, Seq("k1"), Nil),
+        ("composite key", cur, batch, Seq("k1", "k2"), Nil),
+        ("batch with extra columns", cur, wide, Seq("k1", "k2"), Nil),
+        ("batch-only tiebreak", cur, wide, Seq("k1"), Seq(col("bseq"))),
+        ("empty current", emptyCurrent, batch, Seq("k1", "k2"), Nil),
+        ("empty batch", cur, batch.filter(lit(false)), Seq("k1"), Nil))
+      for ((name, c, u, keys, tb) <- cases) {
+        val got = Upsert.merge(c, u, keys, tb)
+        assert(got.columns.toSeq == c.columns.toSeq, s"seed=$seed $name")
+        assert(sorted(got) == sorted(mergeByAntiJoin(c, u, keys, tb)), s"seed=$seed $name")
+      }
     }
   }
 

@@ -1,12 +1,20 @@
 package graft
 
-import graft.domain.Runner
+import graft.domain.{Runner, Schemas}
+import graft.ops.InternalCaches
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 import java.nio.file.Files
 import java.sql.Timestamp
 
-class RunnerSpec extends SparkSpec {
+class RunnerSpec extends SparkSpec with TimeLimits with AdaptiveSparkPlanHelper {
   import spark.implicits._
+  implicit val signaler: Signaler = ThreadSignaler
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -106,5 +114,60 @@ class RunnerSpec extends SparkSpec {
     val names = r.state("season").select("season_id", "name")
       .as[(Long, String)].collect().toMap
     assert(names == Map(1L -> "Borneo", 2L -> "Australian Outback", 3L -> "Africa"))
+  }
+
+  test("watermark: the latest non-null timestamp; None when empty or all null") {
+    val r = new Runner(spark, Files.createTempDirectory("graft_runner_wm").toString)
+    val rows = Seq((1L, Option.empty[Timestamp]), (2L, Some(ts("2001-01-28 00:00:00"))),
+      (3L, Some(ts("2000-05-31 00:00:00"))))
+    assert(r.watermark("season", "showing_started").isEmpty)
+    r.upsert("season", rows.take(1).toDF("season_id", "showing_started"))
+    assert(r.watermark("season", "showing_started").isEmpty)
+    r.upsert("season", rows.toDF("season_id", "showing_started"))
+    assert(r.watermark("season", "showing_started").contains(ts("2001-01-28 00:00:00")))
+  }
+
+  test("upsert is one pass: no cache pin, the batch scanned once by the write") {
+    val dir = Files.createTempDirectory("graft_runner_1pass").toString
+    val r = new Runner(spark, dir)
+    r.upsert("season", Seq((1L, "Borneo", ts("2000-05-31 00:00:00")))
+      .toDF("season_id", "name", "showing_started"))
+    val batchDir = s"$dir/batch_src"
+    Seq((1L, "Pulau Tiga", ts("2000-05-31 00:00:00")),
+      (2L, "Outback", ts("2001-01-28 00:00:00")))
+      .toDF("season_id", "name", "showing_started").write.parquet(batchDir)
+
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        writes.add(qe): Unit
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val pinned = InternalCaches.pinned
+    spark.listenerManager.register(listener)
+    val n =
+      try r.upsert("season", spark.read.parquet(batchDir))
+      finally { drainListenerBus(); spark.listenerManager.unregister(listener) }
+    assert(n == 2)
+    assert(InternalCaches.pinned == pinned)
+    assert(writes.size == 1, "one action: the write")
+    val plan = writes.peek().executedPlan
+    assert(collect(plan) { case s: InMemoryTableScanExec => s }.isEmpty)
+    val scans = collect(plan) { case s: FileSourceScanExec => s.relation.location.rootPaths }
+    assert(scans.count(_.exists(_.toString.endsWith("batch_src"))) == 1, scans)
+    assert(r.state("season").select("name").as[String].collect().sorted.toSeq ==
+      Seq("Outback", "Pulau Tiga"))
+  }
+
+  test("upsert: an empty batch into a never-written table counts 0 and keeps the schema") {
+    val dir = Files.createTempDirectory("graft_runner_empty").toString
+    val r = new Runner(spark, dir)
+    val empty = Seq.empty[(Long, String)].toDF("season_id", "name")
+    val n = failAfter(60.seconds)(r.upsert("season", empty))
+    assert(n == 0)
+    val stored = spark.read.parquet(s"$dir/season")
+    assert(stored.count() == 0)
+    assert(stored.schema.map(f => (f.name, f.dataType)) ==
+      Schemas.of("season").map(f => (f.name, f.dataType)))
   }
 }

@@ -82,19 +82,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterEach {
     }
   }
 
-  /** Block until the shared async listener bus has delivered everything
-    * queued so far (bounded wait). Call INSIDE a quietLoggers window
-    * when a deliberate failure path also echoes through an async
-    * listener (ExecutionListenerBus, task-end abort logging) — without
-    * the drain the echo lands after the logger levels are restored.
-    * (listenerBus is private[spark] in source, public in bytecode.) */
-  def drainListenerBus(): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(5000L)): Unit
-    } catch { case _: Exception => Thread.sleep(300) }
+  /** [[GraftSession.drainListenerBus]] on the shared session. Call INSIDE
+    * a quietLoggers window when a deliberate failure path also echoes
+    * through an async listener (ExecutionListenerBus, task-end abort
+    * logging) — without the drain the echo lands after the logger levels
+    * are restored. */
+  def drainListenerBus(): Unit = GraftSession.drainListenerBus(spark)
 
   /** Run `body` with the given loggers silenced (levels restored after).
     * For DELIBERATE failure paths only — a test that provokes an
