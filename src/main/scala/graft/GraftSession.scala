@@ -7,9 +7,9 @@ import org.apache.spark.sql.SparkSession
   * engine's posture so the library's contracts hold without per-app conf
   * spelunking:
   *
-  *  - graft's native expressions registered cluster-wide
-  *    ([[graft.expressions.GraftExtensions]] — `graft_vec_dot` reaches
-  *    SQL/views, not just the Scala API);
+  *  - graft's native expressions callable from SQL text and views
+  *    ([[graft.expressions.GraftExtensions]]); the Scala API
+  *    ([[graft.expressions.Natives]]) needs no setup on any session;
   *  - UTC session timezone (every timestamp contract in the engine, and
   *    the reference's Postgres convention);
   *  - ANSI mode on (Spark 4 default, stated here because the engine's
@@ -41,13 +41,17 @@ object GraftSession {
   }
 
   /** Plain session for a tool main: `local[n]` with `n` = [[cpus]], UTC,
-    * no UI; `shufflePartitions` defaults to `n`. */
-  def local(defaultCpus: Int, shufflePartitions: Option[Int] = None): SparkSession.Builder = {
+    * no UI; `shufflePartitions` defaults to `n`, the broadcast threshold
+    * to Spark's. */
+  def local(defaultCpus: Int, shufflePartitions: Option[Int] = None,
+            autoBroadcastMb: Option[Int] = None): SparkSession.Builder = {
     val n = cpus(defaultCpus)
-    SparkSession.builder().master(s"local[$n]")
+    val b = SparkSession.builder().master(s"local[$n]")
       .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(n).toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+    autoBroadcastMb.fold(b)(mb =>
+      b.config("spark.sql.autoBroadcastJoinThreshold", mb * 1024L * 1024L))
   }
 
   /** Block until the async listener bus has delivered every event posted
@@ -62,12 +66,17 @@ object GraftSession {
         .invoke(bus, java.lang.Long.valueOf(5000L)): Unit
     } catch { case _: Exception => Thread.sleep(300) }
 
-  /** Task slots: `SPARK_GRAFT_CPUS`, or `default` when unset. Anything but
-    * a positive integer fails naming the variable. */
+  /** Task slots: `SPARK_GRAFT_CPUS`, or `default` when unset. */
   def cpus(default: Int, env: collection.Map[String, String] = sys.env): Int =
-    env.get("SPARK_GRAFT_CPUS").fold(default) { v =>
+    positiveEnv("SPARK_GRAFT_CPUS", default, env)
+
+  /** Environment variable `name` as a count, or `default` when unset.
+    * Anything but a positive integer fails naming the variable. */
+  def positiveEnv(name: String, default: Int,
+                  env: collection.Map[String, String] = sys.env): Int =
+    env.get(name).fold(default) { v =>
       val n = v.toIntOption.filter(_ > 0)
-      require(n.nonEmpty, s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")
+      require(n.nonEmpty, s"$name must be a positive integer, got '$v'")
       n.get
     }
 }

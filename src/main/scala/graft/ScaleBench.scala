@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The committed 10×-scale evidence (r12 verdict #7): time the gated
   * heavy chains at sf0.1 AND at the sf1-equivalent synthetic fixture
   * ([[ScaleFixture]] — the same fixture [[ScaleGateSpec]] trips on) in
@@ -67,10 +65,7 @@ object ScaleBench {
     "x91_collocations")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(32, shufflePartitions = Some(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf01 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val fixture = sys.env.getOrElse("SPARK_GRAFT_SF10X_DIR",

@@ -46,7 +46,6 @@ object Tables {
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.expressions.GraftFunctions.ensureRegistered(spark)
     // The events table has shipped with two physical encodings of `ts`:
     // TIMESTAMP(NANOS) (which Spark 4 only reads as long nanos under the
     // legacy conf) and TIMESTAMP_MICROS (read natively). Dispatch on the

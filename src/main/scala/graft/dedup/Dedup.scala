@@ -4,7 +4,8 @@ import graft.ops.{InternalCaches, Skew}
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.expressions.FastHash.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
+import graft.expressions.Natives
+import graft.expressions.Natives.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
 
 /** Deduplication operators for large-scale corpus cleaning: exact,
   * MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -690,7 +691,6 @@ object Dedup {
     * array).
     */
   def winnowAnchors(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.expressions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val parts = docs.sparkSession.sparkContext.defaultParallelism
     docs
       .filter(col(idCol).isNotNull && col(textCol).isNotNull)
@@ -702,7 +702,7 @@ object Dedup {
       // is a cheap rebalance of the projection, never of anchor rows
       .repartition(parts)
       .select(col(idCol),
-        explode(call_function("graft_winnow", col(textCol))).as("a"))
+        explode(Natives.winnow(col(textCol))).as("a"))
       .select(col(idCol), col("a.pos").cast("long").as("pos"),
         col("a.h").as("h"))
   }

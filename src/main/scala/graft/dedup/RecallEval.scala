@@ -4,7 +4,7 @@ import graft.text.TextOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.expressions.FastHash.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
+import graft.expressions.Natives.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
 import graft.ops.InternalCaches.CacheSyntax
 
 /** LSH recall evaluation — grades a banded-MinHash candidate stage against

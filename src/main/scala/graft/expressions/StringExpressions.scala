@@ -115,7 +115,7 @@ object CdcAlgo {
   }
 }
 
-/** `graft_cdc_bounds(text)` — array<int> of content-defined chunk
+/** [[Natives.cdcBounds]]`(text)` — array<int> of content-defined chunk
   * boundary positions (see [[CdcAlgo]] for the pinned rule). Null text
   * → null.
   */
@@ -131,7 +131,7 @@ case class CdcBoundaries(child: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_cdc_bounds expects string, got ${child.dataType.simpleString}")
+      s"$prettyName expects string, got ${child.dataType.simpleString}")
 
   override def nullSafeEval(t: Any): Any =
     CdcAlgo.bounds(t.asInstanceOf[UTF8String])
@@ -262,7 +262,7 @@ object WinnowAlgo {
   }
 }
 
-/** `graft_winnow(text)` — array<struct<pos:int, h:string>> of winnowed
+/** [[Natives.winnow]]`(text)` — array<struct<pos:int, h:string>> of winnowed
   * k-gram anchors (see [[WinnowAlgo]] for the pinned scheme). Null text
   * → null.
   */
@@ -283,7 +283,7 @@ case class WinnowAnchors(child: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_winnow expects string, got ${child.dataType.simpleString}")
+      s"$prettyName expects string, got ${child.dataType.simpleString}")
 
   override def nullSafeEval(t: Any): Any =
     WinnowAlgo.anchors(t.asInstanceOf[UTF8String])
@@ -361,7 +361,7 @@ object GopherAlgo {
   }
 }
 
-/** `graft_gopher_cov(tokens, k)` — the exact duplicated-k-gram position
+/** [[Natives.gopherCov]]`(tokens, k)` — the exact duplicated-k-gram position
   * coverage of an array<string> token column (see [[GopherAlgo]]).
   * Null tokens-array or null k → null. k must be a foldable positive
   * int in practice (the engine calls it with literals 2 and 3).
@@ -377,7 +377,7 @@ case class GopherCoverage(left: Expression, right: Expression)
     case ArrayType(StringType, _) if right.dataType == IntegerType =>
       TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
-      s"graft_gopher_cov expects (array<string>, int), got " +
+      s"$prettyName expects (array<string>, int), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
@@ -411,7 +411,7 @@ case class JaroWinkler(left: Expression, right: Expression)
     if (left.dataType == StringType && right.dataType == StringType)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_jaro_winkler expects (string, string), got " +
+      s"$prettyName expects (string, string), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
 
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -469,11 +469,10 @@ object Md5Algo {
   }
 }
 
-/** `graft_md5(string|binary)` — drop-in twin of the built-in `md5()`
+/** [[Natives.md5]]`(string|binary)` — drop-in twin of the built-in `md5()`
   * (lowercase 32-char hex of the MD5 of the UTF-8 bytes / raw bytes;
   * null → null), backed by [[Md5Algo]]'s thread-cached digest instead of
-  * a per-row `MessageDigest.getInstance`. Used via
-  * [[graft.expressions.FastHash.md5]], which shadows
+  * a per-row `MessageDigest.getInstance`. [[Natives.md5]] shadows
   * `functions.md5` file-wide so bulk hash paths (MinHash signatures,
   * banding, SimHash votes) switch without touching call sites.
   */
@@ -489,7 +488,7 @@ case class FastMd5(child: Expression)
       case StringType | org.apache.spark.sql.types.BinaryType =>
         TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_md5 expects string or binary, got ${other.simpleString}")
+        s"$prettyName expects string or binary, got ${other.simpleString}")
     }
 
   override def nullSafeEval(v: Any): Any = v match {

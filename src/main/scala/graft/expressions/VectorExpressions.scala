@@ -1,12 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSession
 
 /** Native codegen dot product over two `array<float>` columns.
   *
@@ -32,7 +30,7 @@ case class FloatVectorDot(left: Expression, right: Expression)
     }
     if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"graft_vec_dot expects (array<float>, array<float>), got " +
+      s"$prettyName expects (array<float>, array<float>), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
@@ -79,7 +77,7 @@ case class FloatVectorDot(left: Expression, right: Expression)
 
 /** Nearest-centroid argmin over a LITERAL centroid matrix — the native
   * form of the map-side cell-assignment fold (`array_min` over K structs
-  * of `graft_vec_dot` cosines). Returns the 0-based POSITION of the
+  * of [[FloatVectorDot]] cosines). Returns the 0-based POSITION of the
   * winning centroid; callers order the matrix rows by ascending centroid
   * id so position ties ARE the lowest-cid rule, and map position → cid
   * with `element_at` on a literal id array.
@@ -124,7 +122,7 @@ case class CellArgmin(vec: Expression, cents: Expression, norms: Expression)
     }
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      "graft_cell_argmin expects (array<float>, array<array<float>>, " +
+      s"$prettyName expects (array<float>, array<array<float>>, " +
         s"array<double>), got (${vec.dataType.simpleString}, " +
         s"${cents.dataType.simpleString}, ${norms.dataType.simpleString})")
   }
@@ -243,7 +241,7 @@ case class MicroArgmin(q: Expression, cents: Expression)
     }
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      "graft_micro_argmin expects (array<bigint>, array<array<bigint>>), " +
+      s"$prettyName expects (array<bigint>, array<array<bigint>>), " +
         s"got (${q.dataType.simpleString}, ${cents.dataType.simpleString})")
   }
 
@@ -315,7 +313,7 @@ case class PqEncode(vec: Expression, books: Expression, subDim: Expression)
     }
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      "graft_pq_codes expects (array<double>, array<array<double>>, int), " +
+      s"$prettyName expects (array<double>, array<array<double>>, int), " +
         s"got (${vec.dataType.simpleString}, ${books.dataType.simpleString}, " +
         s"${subDim.dataType.simpleString})")
   }
@@ -393,7 +391,7 @@ case class Sq8Codes(vec: Expression, lows: Expression, highs: Expression)
     }
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      "graft_sq8_codes expects (array<float>, array<double>, array<double>), " +
+      s"$prettyName expects (array<float>, array<double>, array<double>), " +
         s"got (${vec.dataType.simpleString}, ${lows.dataType.simpleString}, " +
         s"${highs.dataType.simpleString})")
   }
@@ -418,113 +416,4 @@ case class Sq8Codes(vec: Expression, lows: Expression, highs: Expression)
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): Sq8Codes =
     copy(vec = newFirst, lows = newSecond, highs = newThird)
-}
-
-/** SparkSessionExtensions hook — the supported way to install graft's
-  * native expressions cluster-wide:
-  *   spark.sql.extensions=graft.expressions.GraftExtensions
-  * (or `.withExtensions(new GraftExtensions)` on the builder). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_vec_dot"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "graft_vec_dot"),
-      (children: Seq[Expression]) => FloatVectorDot(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (children: Seq[Expression]) => JaroWinkler(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cdc_bounds"),
-      new ExpressionInfo(classOf[CdcBoundaries].getName, "graft_cdc_bounds"),
-      (children: Seq[Expression]) => CdcBoundaries(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowAnchors].getName, "graft_winnow"),
-      (children: Seq[Expression]) => WinnowAnchors(children(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gopher_cov"),
-      new ExpressionInfo(classOf[GopherCoverage].getName, "graft_gopher_cov"),
-      (children: Seq[Expression]) => GopherCoverage(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cell_argmin"),
-      new ExpressionInfo(classOf[CellArgmin].getName, "graft_cell_argmin"),
-      (children: Seq[Expression]) =>
-        CellArgmin(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_micro_argmin"),
-      new ExpressionInfo(classOf[MicroArgmin].getName, "graft_micro_argmin"),
-      (children: Seq[Expression]) => MicroArgmin(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pq_codes"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_codes"),
-      (children: Seq[Expression]) =>
-        PqEncode(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sq8_codes"),
-      new ExpressionInfo(classOf[Sq8Codes].getName, "graft_sq8_codes"),
-      (children: Seq[Expression]) =>
-        Sq8Codes(children(0), children(1), children(2))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5"),
-      new ExpressionInfo(classOf[FastMd5].getName, "graft_md5"),
-      (children: Seq[Expression]) => FastMd5(children(0))))
-  }
-}
-
-/** Runtime registration of graft's native expressions into a session's
-  * function registry (same effect as [[GraftExtensions]] for an
-  * already-built classic session; idempotent). */
-object GraftFunctions {
-  @volatile private var registered: Set[String] = Set.empty
-
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val key = spark.sessionState.toString
-    if (!registered.contains(key)) synchronized {
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_vec_dot"),
-        new ExpressionInfo(classOf[FloatVectorDot].getName, "graft_vec_dot"),
-        (children: Seq[Expression]) => FloatVectorDot(children(0), children(1)))
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_jaro_winkler"),
-        new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-        (children: Seq[Expression]) => JaroWinkler(children(0), children(1)))
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_cdc_bounds"),
-        new ExpressionInfo(classOf[CdcBoundaries].getName, "graft_cdc_bounds"),
-        (children: Seq[Expression]) => CdcBoundaries(children(0)))
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_winnow"),
-        new ExpressionInfo(classOf[WinnowAnchors].getName, "graft_winnow"),
-        (children: Seq[Expression]) => WinnowAnchors(children(0)))
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_gopher_cov"),
-        new ExpressionInfo(classOf[GopherCoverage].getName, "graft_gopher_cov"),
-        (children: Seq[Expression]) => GopherCoverage(children(0), children(1)))
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_cell_argmin"),
-        new ExpressionInfo(classOf[CellArgmin].getName, "graft_cell_argmin"),
-        (children: Seq[Expression]) =>
-          CellArgmin(children(0), children(1), children(2)))
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_micro_argmin"),
-        new ExpressionInfo(classOf[MicroArgmin].getName, "graft_micro_argmin"),
-        (children: Seq[Expression]) => MicroArgmin(children(0), children(1)))
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_pq_codes"),
-        new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_codes"),
-        (children: Seq[Expression]) =>
-          PqEncode(children(0), children(1), children(2)))
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_sq8_codes"),
-        new ExpressionInfo(classOf[Sq8Codes].getName, "graft_sq8_codes"),
-        (children: Seq[Expression]) =>
-          Sq8Codes(children(0), children(1), children(2)))
-      spark.sessionState.functionRegistry.registerFunction(
-        FunctionIdentifier("graft_md5"),
-        new ExpressionInfo(classOf[FastMd5].getName, "graft_md5"),
-        (children: Seq[Expression]) => FastMd5(children(0)))
-      registered += key
-    }
-  }
 }

@@ -8,7 +8,8 @@ import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.expressions.FastHash.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
+import graft.expressions.Natives
+import graft.expressions.Natives.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
 import graft.ops.InternalCaches.CacheSyntax
 
 /** Round-3 corpus-layout / analytics operators (x62–x84): the steps
@@ -1199,7 +1200,7 @@ object CorpusQueries {
         // identical to the interpreted filter×aggregate HOF form it
         // replaced (StringExpressionSpec locks the equivalence), which
         // cost 29 s at sf0.1 purely in per-char interpreter overhead
-        .withColumn("bounds", call_function("graft_cdc_bounds", col("text")))
+        .withColumn("bounds", Natives.cdcBounds(col("text")))
         .select(col("doc_id"), explode(expr(
           "zip_with(concat(array(1), transform(bounds, b -> b + 1)), " +
             "concat(bounds, array(length(text))), " +
@@ -1487,7 +1488,7 @@ object CorpusQueries {
       a.join(bSized, Seq("p_brand"))
         .filter(col("id_a") < col("id_b"))
         .withColumn("jw",
-          call_function("graft_jaro_winkler", col("name_a"), col("name_b")))
+          Natives.jaroWinkler(col("name_a"), col("name_b")))
         .filter(col("jw") >= 0.9)
         .select(col("p_brand"), col("id_a"), col("id_b"),
           col("name_a"), col("name_b"), col("jw"))

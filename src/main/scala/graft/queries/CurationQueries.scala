@@ -6,7 +6,7 @@ import graft.similarity.Similarity
 import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.expressions.FastHash.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
+import graft.expressions.Natives.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
 import graft.ops.InternalCaches.CacheSyntax
 
 /** Round-3 curation operators: the data-mixing / dedup / filtering steps a
@@ -49,7 +49,6 @@ object CurationQueries {
     * (qid, vec_id, idot) frame — whatever ranking window runs downstream
     * shuffles 24 bytes per candidate, never vectors or code arrays. */
   private def quantizedDots(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.ensureRegistered(s)
     val emb = t(s, d, "embeddings")
     val (lows, highs) = Similarity.dimRanges(emb, "embedding")
     val coded = emb.select(col("vec_id"),
@@ -404,7 +403,6 @@ object CurationQueries {
     // convention); the scale path composes the same margin over
     // ivfTopK/bucketedTopK candidate lists exactly as x52 reranks
     "x176_bitext_margin" -> ((s, d) => {
-      graft.expressions.GraftFunctions.ensureRegistered(s)
       val e = t(s, d, "embeddings")
         .join(t(s, d, "documents").select(col("doc_id"), col("lang")),
           col("vec_id") === col("doc_id"))
@@ -458,7 +456,6 @@ object CurationQueries {
     // emits only with backward coverage of its target (inner join —
     // deterministic, oracle-replayable)
     "x177_bitext_margin_ivf" -> ((s, d) => {
-      graft.expressions.GraftFunctions.ensureRegistered(s)
       val e = t(s, d, "embeddings")
         .join(t(s, d, "documents").select(col("doc_id"), col("lang")),
           col("vec_id") === col("doc_id"))
@@ -538,7 +535,7 @@ object CurationQueries {
     // neighbors by INTEGER dot product in code space. Codes are 4× smaller
     // than float32 and the ranking surface is pure integers — no float
     // rounding anywhere, so the oracle replays it exactly. The dot runs
-    // through the codegen graft_vec_dot on float-cast codes (0..255 and
+    // through the codegen `vecDot` on float-cast codes (0..255 and
     // 64-dim products are exact in double; cast back to long loses
     // nothing)
     "x46_quantized_ann" -> ((s, d) => {

@@ -7,7 +7,7 @@ import graft.similarity.Similarity
 import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.expressions.FastHash.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
+import graft.expressions.Natives.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
 import graft.ops.InternalCaches.CacheSyntax
 
 /** Training-data-pipeline operators over `documents` / `embeddings`:
@@ -847,7 +847,7 @@ object ExtensionQueries {
     // ───── substring-level dedup (winnowed repeated spans): the
     // Lee-et-al-style "repeated substring" stage, relationally. Anchor
     // selection (MOSS winnowing, k=16/w=8) runs inside the scan
-    // projection via the graft_winnow codegen kernel — only ~2/(w+1) of
+    // projection via the `winnow` codegen kernel — only ~2/(w+1) of
     // positions become (id, pos, hash) rows, text never shuffles; the
     // cross-doc census + per-doc gaps-and-islands merge then find every
     // ≥23-char substring shared by ≥2 docs, alignment-free (stride
@@ -902,7 +902,7 @@ object ExtensionQueries {
     "x121_pq_adc_ann" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       // codebook driver-local (pinLocal): the PQ encode then runs as the
-      // native map-side graft_pq_codes projection (r14) and the LUT
+      // native map-side `pqCodes` projection (r14) and the LUT
       // broadcast is a job-free LocalTableScan
       val cent = Similarity.pinLocal(emb.filter(col("vec_id") < 16)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec")))

@@ -8,7 +8,8 @@ import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.expressions.FastHash.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
+import graft.expressions.Natives
+import graft.expressions.Natives.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
 
 /** Round-9 trainer-loop operators: the pieces that turn one-shot
   * curation steps into the LOOPS a production pipeline actually runs —
@@ -465,7 +466,6 @@ object TrainingQueries {
     // makes extra probes pay (Jégou '11's reason for IVFADC). Ground
     // truth is cached once and reused across all six settings
     "x152_multiprobe_recall" -> ((s, d) => {
-      graft.expressions.GraftFunctions.ensureRegistered(s)
       val emb = t(s, d, "embeddings")
       // model-sized frames DRIVER-LOCAL (pinLocal, r13): the fused sweep
       // embeds them in several broadcasts; registry-caching (r9–r12)
@@ -559,7 +559,6 @@ object TrainingQueries {
     // regime Ge '13 describes. Neither direction is asserted; the oracle
     // pins the arithmetic and the curve reports whatever the data says
     "x153_opq_perm_recall" -> ((s, d) => {
-      graft.expressions.GraftFunctions.ensureRegistered(s)
       val emb = t(s, d, "embeddings").filter(col("vec_id").isNotNull)
       val (m, dim) = (8, 64)
       // per-dim integer variance numerator on the milli grid: one pass
@@ -1425,7 +1424,7 @@ object TrainingQueries {
     * detection and the position-interval union both run IN-ROW — zero
     * exchanges (the r10 plan paid two wide ones: a (doc, k, gram)
     * groupBy with collect_list, then an exploded (doc, k, position)
-    * distinct). The per-row kernel is the `graft_gopher_cov` codegen
+    * distinct). The per-row kernel is the `gopherCov` codegen
     * Expression ([[graft.expressions.GopherAlgo]]): sort the gram start
     * indices token-wise on UTF8String bytes, walk equal runs, mark the
     * covered interval union — O(n log n · k) compares per doc with zero
@@ -1436,7 +1435,6 @@ object TrainingQueries {
     * bound; skew bound = the longest document, as before.
     * PlanAssertSpec pins the zero-exchange plan. */
   private def gopherRepetition(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.ensureRegistered(s)
     val toks = filter(TextOps.tokens(col("text")), w => w =!= "")
     t(s, d, "documents")
       // source participates in every downstream group/equi-join of the
@@ -1450,8 +1448,8 @@ object TrainingQueries {
       .select(col("source"), col("doc_id"), toks.as("t"))
       .withColumn("n", size(col("t")).cast("long"))
       .filter(col("n") >= 1)
-      .withColumn("cov2", call_function("graft_gopher_cov", col("t"), lit(2)))
-      .withColumn("cov3", call_function("graft_gopher_cov", col("t"), lit(3)))
+      .withColumn("cov2", Natives.gopherCov(col("t"), lit(2)))
+      .withColumn("cov3", Natives.gopherCov(col("t"), lit(3)))
       .select(col("source"), col("doc_id"), col("n").as("n_tokens"),
         expr("cov2 * CAST(1000000 AS BIGINT) div n").as("dup2_cover_ppm"),
         expr("cov3 * CAST(1000000 AS BIGINT) div n").as("dup3_cover_ppm"))

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.expressions.GraftFunctions
+import graft.expressions.Natives
 import graft.ops.{InternalCaches, Skew}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -35,7 +35,7 @@ object Similarity {
   /** Deterministic index-ordered dot product (native codegen expression).
     * Value is identical to [[dotFold]]. */
   def dot(a: Column, b: Column): Column =
-    call_function("graft_vec_dot", a, b)
+    Natives.vecDot(a, b)
 
   /** Reference implementation via built-in higher-order functions — kept
     * for cross-checking the native expression in tests. */
@@ -51,7 +51,6 @@ object Similarity {
   /** (id, vec, precomputed norm), spread over the default parallelism. */
   private def withNorm(df: DataFrame, idCol: String, vecCol: String,
                        parts: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(df.sparkSession)
     df.select(col(idCol), col(vecCol))
       .repartition(parts)
       .withColumn("__n", sqrt(dot(col(vecCol), col(vecCol))))
@@ -64,7 +63,6 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       k: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = graft.ops.Partitioning.sizeAdaptive(corpus)
     val c = withNorm(corpus, idCol, vecCol, parts)
     val q = queries.select(col(qidCol), col(qvecCol))
@@ -183,7 +181,6 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String,
       anchors: Seq[Array[Float]], k: Int, probeFlips: Int = 0): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = graft.ops.Partitioning.sizeAdaptive(corpus)
     val cb = withNorm(corpus, idCol, vecCol, parts)
       .withColumn("bucket", bucketCode(col(vecCol), anchors))
@@ -234,7 +231,7 @@ object Similarity {
     * map-side literal fold: argmin via struct-min over (−cos, cid) with
     * each centroid's vector and norm folded into the expression tree —
     * no crossJoin, no window exchange, identical arithmetic (same
-    * graft_vec_dot/sqrt ops the join form evaluates) and the identical
+    * `vecDot`/sqrt ops the join form evaluates) and the identical
     * desc-cos/asc-cid rule (−cos ascending ≡ cos descending; exact-equal
     * ties fall to the lowest cid in both forms). Degenerate-row caveat:
     * a NaN cosine (zero-norm vector) ranks FIRST under the window's
@@ -245,7 +242,6 @@ object Similarity {
                                   centroids: DataFrame, cidCol: String,
                                   cvecCol: String): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = graft.ops.Partitioning.sizeAdaptive(corpus)
     val centPlan = centroids.select(col(cidCol), col(cvecCol))
     val vecLit: Option[org.apache.spark.sql.Row => Column] =
@@ -264,7 +260,7 @@ object Similarity {
       // per-batch append (32 files per micro-batch instead of the scan's)
       case (Some(rows), Some(_), ArrayType(FloatType, _))
           if allNumericCids(rows) =>
-        // NATIVE argmin (graft_cell_argmin) instead of the K-struct
+        // NATIVE argmin (`cellArgmin`) instead of the K-struct
         // array_min fold: the fold inlined K dot loops into whole-stage
         // codegen, blowing the JIT method ceiling when the projection
         // shared a stage with a join — the stage then ran interpreted
@@ -279,7 +275,7 @@ object Similarity {
           c.foreach(f => acc += f.toDouble * f.toDouble)
           math.sqrt(acc)
         }
-        val pos = call_function("graft_cell_argmin", col(vecCol),
+        val pos = Natives.cellArgmin(col(vecCol),
           typedLit(mats), typedLit(norms))
         val cidArr = array(sorted.map(r => lit(r.get(0))).toIndexedSeq: _*)
         corpus.select(col(idCol), col(vecCol))
@@ -334,7 +330,6 @@ object Similarity {
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     centroids: DataFrame, cidCol: String, cvecCol: String,
                     tau: Double): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     // cache: the cell frame feeds both sides of the within-cell self-join
     // plus the final projection (caller-managed lifecycle, as elsewhere)
     val cells = InternalCaches.register(
@@ -373,7 +368,6 @@ object Similarity {
       s"ivfTopK needs distinct (id, vec) names across the two sides, got " +
         s"ids ('$qidCol','$idCol') vecs ('$qvecCol','$vecCol') — the " +
         "candidate join and scored projection would be ambiguous")
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = corpus.sparkSession.sparkContext.defaultParallelism
     val cent = broadcast(centroids.select(col(cidCol), col(cvecCol))
       .withColumn("__cn", sqrt(dot(col(cvecCol), col(cvecCol)))))
@@ -429,7 +423,6 @@ object Similarity {
     require(qvecCol != vecCol,
       s"ivfTopKLarge needs distinct vector names, got '$vecCol' on both " +
         "sides — the scored cosine projection would be ambiguous")
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val cent = broadcast(centroids.select(col(cidCol), col(cvecCol))
       .withColumn("__cn", sqrt(dot(col(cvecCol), col(cvecCol)))))
     val cells = assignCellsWithNorm(corpus, idCol, vecCol,
@@ -469,7 +462,6 @@ object Similarity {
                       queries: DataFrame, qidCol: String, qvecCol: String,
                       centroids: DataFrame, cidCol: String, cvecCol: String,
                       k: Int, probes: Int): DataFrame = {
-    GraftFunctions.ensureRegistered(cells.sparkSession)
     val cent = broadcast(centroids.select(col(cidCol), col(cvecCol))
       .withColumn("__cn", sqrt(dot(col(cvecCol), col(cvecCol)))))
     // rename query columns up front: the natural call passes the index's
@@ -529,13 +521,12 @@ object Similarity {
     require(lows.length == highs.length && lows.nonEmpty)
     lows.indices.foreach(i => require(highs(i) > lows(i),
       s"degenerate dim $i: lo=${lows(i)} hi=${highs(i)}"))
-    // native (graft_sq8_codes): the r3 unrolled-expression form avoided
+    // native (`sq8Codes`): the r3 unrolled-expression form avoided
     // the interpreted `transform` lambda, but at dim=64 the unroll
     // itself blows the JIT method ceiling when the projection shares a
     // codegen stage with a join (the r14 cliff — identical per-dim IEEE
-    // arithmetic, see Sq8Codes). Callers register via
-    // GraftFunctions.ensureRegistered (quantizedDots does; specs do).
-    call_function("graft_sq8_codes", vec, typedLit(lows), typedLit(highs))
+    // arithmetic, see Sq8Codes).
+    Natives.sq8Codes(vec, typedLit(lows), typedLit(highs))
   }
 
   /** Embedding near-duplicate pairs, ALL-PAIRS baseline: exact recall,
@@ -543,7 +534,6 @@ object Similarity {
     * [[nearDupPairsBanded]] in tests; never run standalone at scale. */
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                    tau: Double): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = graft.ops.Partitioning.sizeAdaptive(corpus)
     val v = withNorm(corpus, idCol, vecCol, parts)
     v.as("a").join(v.as("b"), col(s"a.$idCol") < col(s"b.$idCol"))
@@ -582,7 +572,6 @@ object Similarity {
                          bitsPerTable: Int = 2): DataFrame = {
     require(anchors.nonEmpty && anchors.length % bitsPerTable == 0,
       s"anchors (${anchors.length}) must divide evenly into tables of $bitsPerTable bits")
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = graft.ops.Partitioning.sizeAdaptive(corpus)
     val numTables = anchors.length / bitsPerTable
     // cache: the (id, vec, norm) frame feeds the coding pass AND both
@@ -664,7 +653,7 @@ object Similarity {
     * Edge-shape divergence between the two branches, outside every
     * caller's fixed-dim non-null contract (same class of note as
     * [[graft.expressions.CellArgmin]]): on a dim-mismatched or null
-    * vector the native path's `graft_pq_codes` returns a null codes
+    * vector the native path's `pqCodes` returns a null codes
     * array which `posexplode` silently DROPS (the row vanishes from the
     * code frame), while the relational fallback still emits m rows whose
     * min-structs saw null sub-distances. Identical inputs in-contract,
@@ -683,7 +672,7 @@ object Similarity {
     }
     localRows match {
       case Some(rows) =>
-        // NATIVE encode (graft_pq_codes) over a driver-local codebook:
+        // NATIVE encode (`pqCodes`) over a driver-local codebook:
         // the relational pipeline below paid an explode, a broadcast
         // join and a SortAggregate (min over a struct can't hash-agg —
         // two sorts) per corpus pass; this is one map-side loop with the
@@ -691,11 +680,10 @@ object Similarity {
         // ties (book sorted by cid, first-win = struct-min). No
         // rebalance: per-row cost is m×|book|×subDim native flops —
         // light — and the scan's splits parallelize at real scale.
-        GraftFunctions.ensureRegistered(ev.sparkSession)
         val sorted = rows.sortBy(_.get(0).asInstanceOf[java.lang.Number].longValue)
         val mats: Seq[Seq[Double]] = sorted.map(_.getSeq[Double](1)).toSeq
         val cidArr = array(sorted.map(r => lit(r.get(0))).toIndexedSeq: _*)
-        ev.select(col(idCol), posexplode(call_function("graft_pq_codes",
+        ev.select(col(idCol), posexplode(Natives.pqCodes(
             col("__v"), typedLit(mats), lit(subDim))).as(Seq("s", "__pos")))
           .select(col(idCol), col("s"),
             element_at(cidArr, col("__pos") + 1).as("code"))
@@ -838,7 +826,6 @@ object Similarity {
     require(idCol != cidCol,
       s"idCol and cidCol are both '$idCol' — rename the centroid id first")
     val subDim = dim / m
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = corpus.sparkSession.sparkContext.defaultParallelism
     val cells = cellsOpt.getOrElse(
         assignCells(corpus, idCol, vecCol, centroids, cidCol, cvecCol))
@@ -887,7 +874,6 @@ object Similarity {
       s"idCol and cidCol are both '$idCol' — the sub-distance join would be " +
         "ambiguous; rename the centroid id (e.g. .withColumnRenamed) first")
     val subDim = dim / m
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = corpus.sparkSession.sparkContext.defaultParallelism
     // coarse cells, exactly ivfTopK's assignment (cosine, lowest-cid tie)
     val cells = assignCells(corpus, idCol, vecCol, centroids, cidCol, cvecCol)
@@ -978,7 +964,6 @@ object Similarity {
       s"idCol '$idCol' must differ from centroid id columns — the " +
         "sub-distance joins would be ambiguous; rename first")
     val subDim = dim / m
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = corpus.sparkSession.sparkContext.defaultParallelism
     val fineD = fine.select(col(fcidCol), col(fvecCol).cast("array<double>").as("__cv"))
 
@@ -1044,7 +1029,6 @@ object Similarity {
     require(idCol != fcidCol && idCol != cidCol,
       s"idCol '$idCol' must differ from centroid id columns — rename first")
     val subDim = dim / m
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = corpus.sparkSession.sparkContext.defaultParallelism
     val fineD = fine.select(col(fcidCol), col(fvecCol).cast("array<double>").as("__cv"))
     val resid = residuals(corpus.select(col(idCol), col(vecCol)),
@@ -1107,7 +1091,6 @@ object Similarity {
     require(idCol != fcidCol && idCol != cidCol,
       s"idCol '$idCol' must differ from centroid id columns — rename first")
     val subDim = dim / m
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val parts = corpus.sparkSession.sparkContext.defaultParallelism
     val cells = cellsOpt.getOrElse(
         assignCells(corpus, idCol, vecCol, centroids, cidCol, cvecCol))
@@ -1140,7 +1123,7 @@ object Similarity {
     val ev = corpus.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
     val resid = residuals(corpus.select(col(idCol), col(vecCol)),
       idCol, vecCol, centroids, cidCol, cvecCol, Some(cells))
-    // per-scheme NATIVE encodes (graft_pq_codes under a driver-local
+    // per-scheme NATIVE encodes (`pqCodes` under a driver-local
     // book — the r14 path; relational fallback otherwise): the fused
     // scheme-tagged pqSubDists encode was the dominant CPU of the whole
     // sweep (17 CPU-s at sf0.1 — interpreted folds × schemes × m × |book|)
@@ -1245,7 +1228,6 @@ object Similarity {
       s"idCol and cidCol are both '$idCol' — rename the centroid id first")
     val subDim = dim / m
     val spark = variants.head._2.sparkSession
-    GraftFunctions.ensureRegistered(spark)
     val parts = spark.sparkContext.defaultParallelism
     val cellsP = cells.select(col(idCol), col("cell"))
     // probe ranking from the first variant's centroids/queries
@@ -1265,7 +1247,7 @@ object Similarity {
     val cand = cellsP.join(broadcast(qcells),
       col("cell") === col("qcell") && col("__qid") =!= col(idCol))
       .select(col("__qid"), col("qcell"), col(idCol), col("__cellRank"))
-    // per-variant NATIVE encodes (graft_pq_codes — see ivfPqDualSweepTopK)
+    // per-variant NATIVE encodes (`pqCodes` — see ivfPqDualSweepTopK)
     val codes = variants.map { case (tag, c, ct, _) =>
       pqCodes(c.select(col(idCol), col(vecCol).cast("array<double>").as("__v")),
           idCol,
@@ -1307,14 +1289,14 @@ object Similarity {
     * join against the assignments frame, no exchange, the centroid grid
     * folds into the expression tree as literals. */
   def microArgmin(q: Column, cents: Seq[Array[Long]]): Column =
-    // native (graft_micro_argmin): one compiled K×dim loop returning the
+    // native (`microArgmin`): one compiled K×dim loop returning the
     // same struct<d, c> the r1–r13 array_min-over-structs fold produced —
     // the interpreted zip_with/aggregate lambdas were the dominant CPU of
     // every k-means training pass (r14 census), and K inlined HOF trees
     // also bloat whole-stage codegen past the JIT ceiling (see
     // CellArgmin). Identical values and lowest-cluster tie rule on
     // in-contract (fixed-dim, non-null, non-overflowing) data.
-    call_function("graft_micro_argmin", q, typedLit(cents.map(_.toSeq)))
+    Natives.microArgmin(q, typedLit(cents.map(_.toSeq)))
 
   /** Lloyd's k-means over an embedding column, engine-replayable — the
     * missing TRAINING stage behind every centroid table in this module
@@ -1372,7 +1354,6 @@ object Similarity {
                               keepVec: Boolean)
       : (KmeansModel, Option[DataFrame]) = {
     require(k > 0 && iters >= 0, "k-means needs k > 0, iters >= 0")
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     // size-adaptive fan-out (guide §2, r16 verdict item 1): the iters+1
     // passes over this cached frame paid cores× per-task fixed cost on a
     // KB-scale corpus; production sizes still get defaultParallelism
@@ -1571,7 +1552,6 @@ object Similarity {
     * sits at cosine ≥ tau; output `(idCol, cell, is_dup)`. */
   def semanticDedupLabeled(labeledIn: DataFrame, idCol: String,
                            vecCol: String, tau: Double): DataFrame = {
-    GraftFunctions.ensureRegistered(labeledIn.sparkSession)
     val labeled = labeledIn
       .select(col(idCol), col(vecCol), col("cell"))
       .withColumn("__n", sqrt(dot(col(vecCol), col(vecCol))))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.expressions.Natives
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -473,7 +474,7 @@ object Streams {
   /** Streaming substring-level decontamination: flag arriving documents
     * that share a winnowed anchor hash (≥ 23-char substring, see
     * [[graft.dedup.Dedup.winnowSpansAgainst]]) with a STATIC benchmark
-    * suite. Anchor selection is a stateless projection (the graft_winnow
+    * suite. Anchor selection is a stateless projection (the `winnow`
     * kernel), the probe is a stream-static left-semi join against the
     * (small) benchmark anchor-hash frame, and the only state is the
     * doc-id dedup — so the same winnow machinery that batch-audits a
@@ -494,11 +495,10 @@ object Streams {
                                   idCol: String, textCol: String): DataFrame = {
     val refH = graft.dedup.Dedup.winnowAnchors(benchDocs, idCol, textCol)
       .select(col("h")).distinct()
-    graft.expressions.GraftFunctions.ensureRegistered(stream.sparkSession)
     stream
       .filter(col(idCol).isNotNull && col(textCol).isNotNull)
       .select(col(idCol),
-        explode(call_function("graft_winnow", col(textCol))).as("a"))
+        explode(Natives.winnow(col(textCol))).as("a"))
       .select(col(idCol), col("a.h").as("h"))
       .join(broadcast(refH), Seq("h"), "left_semi")
       .select(col(idCol))
@@ -804,12 +804,11 @@ object Streams {
                                   watermarkDelay: String): DataFrame = {
     val refH = graft.dedup.Dedup.winnowAnchors(benchDocs, idCol, textCol)
       .select(col("h")).distinct()
-    graft.expressions.GraftFunctions.ensureRegistered(stream.sparkSession)
     stream
       .filter(col(idCol).isNotNull && col(textCol).isNotNull)
       .withWatermark(tsCol, watermarkDelay)
       .select(col(idCol), col(tsCol),
-        explode(call_function("graft_winnow", col(textCol))).as("a"))
+        explode(Natives.winnow(col(textCol))).as("a"))
       .select(col(idCol), col(tsCol), col("a.h").as("h"))
       .join(broadcast(refH), Seq("h"), "left_semi")
       .select(col(idCol), col(tsCol))

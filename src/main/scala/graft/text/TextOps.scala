@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.expressions.FastHash.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
+import graft.expressions.Natives.md5 // shadows functions.md5 (bit-identical, thread-cached digest)
 
 /** Text-analysis operators for a training-data pipeline: normalization,
   * tokenization, shingling, language-ID, quality scoring, fingerprinting.

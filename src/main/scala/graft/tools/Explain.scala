@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Dev tool: print the formatted physical plan (and optionally time) of one
   * catalog query. Usage: runMain graft.tools.Explain <queryName> [sfDir] [--time]
@@ -11,13 +10,8 @@ object Explain {
     val name = args(0)
     val sfDir = args.lift(1).filterNot(_.startsWith("--")).getOrElse("/root/testdata/sf0.1")
     val doTime = args.contains("--time")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .getOrCreate()
+    val spark = GraftSession.local(32, shufflePartitions = Some(32),
+      autoBroadcastMb = Some(64)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.explain("formatted")

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.similarity.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off probe: per-row cost of the map-side literal-fold cell
@@ -11,11 +11,8 @@ import org.apache.spark.sql.functions._
   */
 object FoldProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[1]")
-      .config("spark.sql.shuffle.partitions", 1)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(1, shufflePartitions = Some(1)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.expressions.GraftFunctions.ensureRegistered(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
       .select(col("vec_id"), col("embedding")).cache()
     emb.count(): Unit

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Ad-hoc plan inspector: `runMain graft.tools.PlanDump <sfDir> <query...>`
   * prints each named catalog query's executed plan — the quick way to
@@ -12,11 +12,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4, shufflePartitions = Some(4)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

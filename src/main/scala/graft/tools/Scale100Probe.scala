@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** The 100×-shape probe (r15 verdict #3): x135's prefix-filter join
   * carries the catalog's weakest 10× gate because its cost is Σposting²
@@ -27,11 +27,8 @@ object Scale100Probe {
     // partitions hold in memory on one box (the 8 GB run died; 48 GB
     // spills) — a cluster scales the partition count with the data, and
     // the knob lets the probe measure that configuration honestly.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", "32").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val parts = GraftSession.positiveEnv("SPARK_GRAFT_PARTS", 32)
+    val spark = GraftSession.local(32, shufflePartitions = Some(parts)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf01 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dir100 = sys.env.getOrElse("SPARK_GRAFT_SF100X_DIR",

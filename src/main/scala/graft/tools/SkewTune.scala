@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{SkewStress, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SkewStress, Tables}
 
 /** Parameter sweep for the hot-bucket guard on the skew stress fixtures:
   * times hot vs uniform twins at each (hotThreshold, blockSize) and prints
@@ -11,12 +10,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SkewTune {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .getOrCreate()
+    val spark = GraftSession.local(32, shufflePartitions = Some(32),
+      autoBroadcastMb = Some(64)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = args.headOption.map(_.toLong).getOrElse(
       Tables.load(spark, "/root/testdata/sf0.1", "documents").count())

@@ -16,4 +16,21 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
     }
   }
+
+  test("positiveEnv: SPARK_GRAFT_PARTS when set, the default when unset") {
+    assert(GraftSession.positiveEnv("SPARK_GRAFT_PARTS", 32, Map.empty) == 32)
+    assert(GraftSession.positiveEnv("SPARK_GRAFT_PARTS", 32,
+      Map("SPARK_GRAFT_PARTS" -> "256")) == 256)
+    // only the named variable is read
+    assert(GraftSession.positiveEnv("SPARK_GRAFT_PARTS", 32,
+      Map("SPARK_GRAFT_CPUS" -> "8")) == 32)
+  }
+
+  test("positiveEnv: anything but a positive integer fails naming the variable") {
+    for (bad <- Seq("0", "-32", "lots", "", "64 ", "1e3")) {
+      val e = intercept[IllegalArgumentException](
+        GraftSession.positiveEnv("SPARK_GRAFT_PARTS", 32, Map("SPARK_GRAFT_PARTS" -> bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_PARTS"), bad)
+    }
+  }
 }

@@ -156,7 +156,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("quantizeCodes: codes in range, reconstruction error ≤ half a step") {
-    graft.expressions.GraftFunctions.ensureRegistered(spark)
     val vecGen = Gen.listOfN(20, Gen.listOfN(6,
       Gen.choose(-1000, 1000).map(_ / 100.0f)))
     for (seed <- 1L to 3L) {

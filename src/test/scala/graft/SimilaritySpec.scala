@@ -106,7 +106,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("quantizeCodes maps per-dim extremes to 0/255, interior points by round-half-up") {
-    graft.expressions.GraftFunctions.ensureRegistered(spark)
     val (lows, highs) = Similarity.dimRanges(corpus, "embedding")
     // dim 1 spans [-1, 1], dim 2 [0, 1], dim 3 [0, 1]
     assert(lows == Seq(-1.0, 0.0, 0.0) && highs == Seq(1.0, 1.0, 1.0))
@@ -121,7 +120,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("quantized integer dot via graft_vec_dot equals exact BigInt arithmetic") {
-    graft.expressions.GraftFunctions.ensureRegistered(spark)
     val (lows, highs) = Similarity.dimRanges(corpus, "embedding")
     val coded = corpus.select($"vec_id",
       Similarity.quantizeCodes($"embedding", lows, highs).as("codes"))

@@ -111,8 +111,8 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.expressions.GraftExtensions)
       .getOrCreate()
-    graft.expressions.GraftFunctions.ensureRegistered(s)
     // Session-wide allowlist for the two async teardown-noise sources
     // the per-window silencing provably cannot catch (the r15 judge run
     // saw them in an all-green suite; reproduced here):

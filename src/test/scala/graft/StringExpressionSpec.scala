@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.JaroWinklerAlgo
+import graft.expressions.{JaroWinklerAlgo, Natives}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -39,7 +39,7 @@ class StringExpressionSpec extends SparkSpec {
       .toDF("a", "b")
     val viaExpr = pairs
       .select($"a", $"b",
-        call_function("graft_jaro_winkler", $"a", $"b").as("s"))
+        Natives.jaroWinkler($"a", $"b").as("s"))
       .collect()
     viaExpr.foreach { r =>
       assert(r.getDouble(2) == jw(r.getString(0), r.getString(1)),
@@ -65,7 +65,7 @@ class StringExpressionSpec extends SparkSpec {
         "% 2147483647) % 32 = 0))"
     val mismatches = docs
       .select(col("doc_id"),
-        call_function("graft_cdc_bounds", col("text")).as("fast"),
+        Natives.cdcBounds(col("text")).as("fast"),
         expr(hof).cast("array<int>").as("slow"))
       .filter(col("fast") =!= col("slow"))
       .count()
@@ -73,7 +73,7 @@ class StringExpressionSpec extends SparkSpec {
     // edge cases: empty, exactly window-size, null
     val edge = Seq(("", 1), ("abcdefgh", 2), ("abcdefghi", 3))
       .toDF("t", "i")
-    val r = edge.select(call_function("graft_cdc_bounds", $"t")).collect()
+    val r = edge.select(Natives.cdcBounds($"t")).collect()
     assert(r.forall(!_.isNullAt(0)))
     val nul = spark.sql(
       "SELECT graft_cdc_bounds(CAST(NULL AS STRING))").collect().head
@@ -111,13 +111,12 @@ class StringExpressionSpec extends SparkSpec {
       assert(cov(t, k) == expect, s"k=$k t=$t")
     }
     // SQL registration: null array -> null; codegen path == kernel
-    graft.expressions.GraftFunctions.ensureRegistered(spark)
     val nul = spark.sql(
       "SELECT graft_gopher_cov(CAST(NULL AS ARRAY<STRING>), 2)").collect().head
     assert(nul.isNullAt(0))
     val viaSql = Seq(Seq("a", "a", "a", "a"), Seq("x", "y", "x", "y"))
       .toDF("t")
-      .select(call_function("graft_gopher_cov", $"t", lit(2)))
+      .select(Natives.gopherCov($"t", lit(2)))
       .as[Long].collect().toSeq
     assert(viaSql == Seq(4L, 4L))
   }
@@ -129,8 +128,8 @@ class StringExpressionSpec extends SparkSpec {
     val pairs = toks.as("a").crossJoin(toks.as("b"))
       .select(col("a.tok").as("ta"), col("b.tok").as("tb"))
     val bad = pairs.select(
-      call_function("graft_jaro_winkler", col("ta"), col("tb")).as("ab"),
-      call_function("graft_jaro_winkler", col("tb"), col("ta")).as("ba"))
+      Natives.jaroWinkler(col("ta"), col("tb")).as("ab"),
+      Natives.jaroWinkler(col("tb"), col("ta")).as("ba"))
       .filter(col("ab") =!= col("ba") || col("ab") < 0.0 || col("ab") > 1.0)
       .count()
     assert(bad == 0)

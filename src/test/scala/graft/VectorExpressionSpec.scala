@@ -1,5 +1,6 @@
 package graft
 
+import graft.expressions.Natives
 import graft.similarity.Similarity
 import org.apache.spark.sql.functions._
 
@@ -19,7 +20,6 @@ class VectorExpressionSpec extends SparkSpec {
   }
 
   test("graft_cell_argmin is value-identical to the struct array_min fold (incl. near-ties)") {
-    graft.expressions.GraftFunctions.ensureRegistered(spark)
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val cents: Seq[(Long, Seq[Float])] = emb.filter($"vec_id" < 16)
       .orderBy($"vec_id").collect()
@@ -40,7 +40,7 @@ class VectorExpressionSpec extends SparkSpec {
     }
     val native = element_at(
       array(cents.map(c => lit(c._1)): _*),
-      call_function("graft_cell_argmin", v,
+      Natives.cellArgmin(v,
         typedLit(cents.map(_._2)), typedLit(norms)) + 1)
     val bad = emb.select($"vec_id", fold.as("f"), native.as("g"))
       .filter($"f" =!= $"g").count()
@@ -48,7 +48,6 @@ class VectorExpressionSpec extends SparkSpec {
   }
 
   test("graft_micro_argmin is value-identical to the zip_with/aggregate struct fold") {
-    graft.expressions.GraftFunctions.ensureRegistered(spark)
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val q = Similarity.quantizeMicro(col("embedding"), 1000000L)
     val qd = emb.select($"vec_id", q.as("__q"))
@@ -70,7 +69,6 @@ class VectorExpressionSpec extends SparkSpec {
   }
 
   test("graft_pq_codes is value-identical to the explode/join/min-struct encode") {
-    graft.expressions.GraftFunctions.ensureRegistered(spark)
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val (m, subDim) = (8, 8)
     val cents: Seq[(Long, Seq[Double])] = emb.filter($"vec_id" < 16)
@@ -96,7 +94,7 @@ class VectorExpressionSpec extends SparkSpec {
       .select($"vec_id", $"s", $"__m".getField("cid").as("code"))
       .as[(Long, Int, Long)].collect().toSet
     val nat = ev.select($"vec_id",
-        posexplode(call_function("graft_pq_codes", $"__v",
+        posexplode(Natives.pqCodes($"__v",
           typedLit(cents.map(_._2)), lit(subDim))).as(Seq("s", "p")))
       .select($"vec_id", $"s",
         element_at(array(cents.map(c => lit(c._1)): _*), $"p" + 1).as("code"))
