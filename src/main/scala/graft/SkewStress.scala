@@ -13,8 +13,11 @@ import graft.ops.InternalCaches.CacheSyntax
   * chunk, a degenerate perceptual-hash band — benched against UNIFORM
   * twins of identical size and near-identical output volume. The bench
   * emits both timings ("skew" section of the JSON line); the hot/uniform
-  * ratio is the number that says whether the bounded-pair guards
-  * ([[graft.ops.Skew.boundedSelfPairs]]) hold under degenerate data.
+  * ratio is the number that says whether the bounded-pair guards hold
+  * under degenerate data. The self-pair guards
+  * ([[graft.ops.Skew.boundedSelfPairs]], `boundedWideBandPairs`: x27,
+  * x84) count bucket populations inside the plan, with no driver action;
+  * the x49 `…Between` guard still runs a driver-side census first.
   *
   * Stress paths run the REAL operators (minhashLshPairs, the x38 chunk
   * pipeline, the x84 band-join shape) with lowered guard thresholds so

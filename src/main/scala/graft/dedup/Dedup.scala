@@ -72,21 +72,18 @@ object Dedup {
     * components grouped into bands of `rowsPerBand`; docs sharing ALL
     * components of any band land in the same bucket → candidate pair.
     *
-    * Shuffle profile: ONE shuffle — the bucket self-join over
-    * (band-hash, id, carried signature) rows, hot buckets triangle-
-    * decomposed into bounded blocks
-    * ([[graft.ops.Skew.boundedWideBandPairs]]); cross-band duplicates
-    * drop by first-matching-band (no distinct) and the estimated-Jaccard
-    * filter ≥ tau evaluates inline on the carried signatures.
+    * Pair generation is the bucket self-join over (band-hash, id,
+    * carried signature) rows, hot buckets triangle-decomposed into
+    * bounded blocks ([[graft.ops.Skew.boundedWideBandPairs]]); cross-band
+    * duplicates drop by first-matching-band (no distinct) and the
+    * estimated-Jaccard filter ≥ tau evaluates inline on the carried
+    * signatures. The result is one lazy plan: building it runs no Spark
+    * job and pins no cache.
     */
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       shingleK: Int = 3, numHashes: Int = 12,
                       rowsPerBand: Int = 3, tau: Double = 0.5,
                       hotThreshold: Int = 4096, blockSize: Int = 2048): DataFrame = {
-    // NOTE cache lifecycle: the pair generator caches its internal
-    // banded+carry frame (census + both join sides read it); the entry
-    // lives until the caller's session drops it (clearCache/unpersist) —
-    // long-running services should treat that as caller-managed state
     require(numHashes % rowsPerBand == 0,
       s"numHashes ($numHashes) must be a multiple of rowsPerBand ($rowsPerBand): " +
         "trailing signature components would be silently excluded from banding")
@@ -151,11 +148,15 @@ object Dedup {
       .filter(col("est_jaccard") >= tau)
   }
 
-  /** Banding + estimated-Jaccard filter over an already-computed (cached)
+  /** Banding + estimated-Jaccard filter over an already-computed
     * signature frame — shared by [[minhashLshPairs]] and
     * [[lshDedupClusters]], and public for composed pipelines that reuse
     * one signature frame across stages (x115/x116 share signatures
-    * between candidate generation, verification, and clustering). */
+    * between candidate generation, verification, and clustering). Lazy:
+    * the signature lineage is read once by the generator's bucket-
+    * population window, whose exchange both join sides reuse, so an
+    * uncached `signed` is not recomputed per side; cache it only when
+    * other stages read it too. */
   def lshPairsFromSignatures(signed: DataFrame, idCol: String,
                                 numHashes: Int, rowsPerBand: Int,
                                 tau: Double, hotThreshold: Int = 4096,
@@ -166,7 +167,7 @@ object Dedup {
     // ~blockSize². Signatures ride through generation as the carry
     // payload: the estimated-Jaccard verify is an inline projection — no
     // candidate re-joins against the signature frame, no cross-band
-    // distinct (first-matching-band dedup), one shuffle end to end
+    // distinct (first-matching-band dedup)
     Skew.boundedWideBandPairs(
         bandWide(signed, idCol, numHashes, rowsPerBand), idCol,
         bandNames(numHashes / rowsPerBand), hotThreshold, blockSize,
@@ -665,8 +666,8 @@ object Dedup {
     // the sum of per-band bit_counts over the carried band vectors —
     // no join back to the signature frame, no cross-band distinct:
     // boundedWideBandPairs (hot buckets triangle-decomposed, payloads
-    // carried, first-matching-band dedup) makes generation + verify ONE
-    // shuffle end to end, with the identical pair set
+    // carried, first-matching-band dedup) runs generation + verify with
+    // no re-join, with the identical pair set
     val h = simhashDF(docs, idCol, textCol, bits)
     val bandNames = (0 until numBands).map(b => s"__b$b")
     val wide = h.select(col(idCol) +: (0 until numBands).map(b =>

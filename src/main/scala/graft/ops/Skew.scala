@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Skew-handling join helpers.
@@ -105,6 +106,41 @@ object Skew {
     salted.join(replicated, Seq(key, "__salt"), joinType).drop("__salt")
   }
 
+  /** Triangle-block self-join of `frame` on its bucket keys `keyCols`, as
+    * one lazy plan. `frame` holds the keys, an `__id` column (unique
+    * within a bucket) and payload columns; each non-key column `c` comes
+    * out as `ca` (left row) and `cb` (right row).
+    *
+    * A window count gives each row its bucket population `n`; a bucket
+    * with `n > hotThreshold` splits into `nblk = ceil(n / blockSize)`
+    * hash-blocks, any other keeps one. The join runs on `(keys, __bl,
+    * __br)`, `__bl ≤ __br`: a row in block p is the LEFT side of block
+    * pairs (p, p..nblk-1) and the RIGHT side of (0..p, p). A cross-block
+    * pair meets in one task, a same-block pair in both orientations and
+    * the id order keeps one. A cold bucket's one block makes this the
+    * plain bucket self-join. Per-task join work is ≤ ~blockSize²; the
+    * window count over a hot bucket is linear and can spill. Both sides
+    * read the same window input, so Spark plans its exchange once
+    * (`ReusedExchange`): no cache, no driver action, and AQE coalesces
+    * every stage. */
+  private def triangleSelfJoin(frame: DataFrame, keyCols: Seq[String],
+                               hotThreshold: Int, blockSize: Int): DataFrame = {
+    val keys = keyCols.map(col)
+    val others = frame.columns.toSeq.filterNot(keyCols.contains)
+    val blocked = frame
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(keys: _*)))
+      .withColumn("__nblk", when(col("__n") > hotThreshold,
+        ceil(col("__n") / blockSize).cast("int")).otherwise(lit(1)))
+      .withColumn("__blk", pmod(xxhash64(col("__id")), col("__nblk")).cast("int"))
+    def side(bl: Column, br: Column, suffix: String): DataFrame =
+      blocked.select(keys ++ Seq(bl.as("__bl"), br.as("__br")) ++
+        others.map(c => col(c).as(c + suffix)): _*)
+    side(col("__blk"), explode(sequence(col("__blk"), col("__nblk") - 1)), "a")
+      .join(side(explode(sequence(lit(0), col("__blk"))), col("__blk"), "b"),
+        keyCols ++ Seq("__bl", "__br"))
+      .filter(col("__bl") =!= col("__br") || col("__ida") < col("__idb"))
+  }
+
   /** All unordered candidate pairs `(id_a < id_b)` within buckets of
     * `rows` keyed by `keyCols`, with per-task work bounded even when one
     * bucket holds a large fraction of all rows — the LSH hot-band hazard
@@ -112,28 +148,12 @@ object Skew {
     * hash bands: many rows sharing one band value).
     *
     * A naive self-join on the bucket key lands a bucket of population n in
-    * ONE task doing n²/2 comparisons. Here each bucket is decomposed into
-    * `nblk = ceil(n / blockSize)` hash-blocks and the self-join runs on
-    * `(key, blockL, blockR)` with `blockL ≤ blockR` — the triangle
-    * decomposition of a self-join (each row replicates to its row of the
-    * block-pair triangle). Per-task work is ≤ ~blockSize² and the OUTPUT IS
-    * IDENTICAL to the naive join: a cross-block pair appears in exactly one
-    * block-pair task, a same-block pair in both orientations, and the final
-    * distinct collapses orientation duplicates (the callers' downstream
-    * distinct over bands needs the same pass anyway).
-    *
-    * Buckets at or below `hotThreshold` take `nblk = 1`, so the plan
-    * degenerates to the plain bucket self-join. The census that finds hot
-    * buckets runs as its OWN bounded action over a cached slim
-    * (keys, id) frame — cached because census + both join sides would
-    * otherwise each recompute the upstream banding/signature lineage
-    * (measured 1.6–2.5× on the uniform-corpus dedup queries before the
-    * cache) — and when the census comes back empty the guard machinery is
-    * skipped entirely: the result IS the plain self-join, the adaptivity
-    * rule every other two-path operator here follows (CC's
-    * collectThreshold, broadcast-vs-shuffle). AQE skew-join splitting
-    * still applies on top for mid-sized buckets. The cache follows the
-    * caller-managed convention (Verify/Bench clear caches per query).
+    * ONE task doing n²/2 comparisons. Here buckets above `hotThreshold`
+    * decompose into hash-blocks joined block pair by block pair
+    * ([[triangleSelfJoin]]): per-task work is ≤ ~blockSize² and the
+    * OUTPUT IS IDENTICAL to the naive join. The final distinct collapses
+    * pairs shared by several buckets. Building the frame runs no Spark
+    * job and pins no cache.
     *
     * `rows` must hold one row per (bucket, id) — ids unique within a
     * bucket — with non-null key columns, the shape every banded-LSH
@@ -145,40 +165,8 @@ object Skew {
                        blockSize: Int = 2048): DataFrame = {
     require(keyCols.nonEmpty, "at least one bucket key column")
     require(hotThreshold > 0 && blockSize > 0)
-    val keys = keyCols.map(col)
-    val slim = InternalCaches.register(rows.select((keys :+ col(idCol)): _*))
-    // hot-bucket census: tiny by definition (only buckets over threshold)
-    val hot = slim.groupBy(keys: _*).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > hotThreshold)
-    val hotHead = censusHead(hot, keyCols)
-    if (hotHead.isEmpty) {
-      // skew-free corpus: no guard tax — one census job over the cached
-      // frame, then the plain bucket self-join
-      return slim.toDF((keyCols :+ "__ida"): _*).as("a")
-        .join(slim.toDF((keyCols :+ "__idb"): _*).as("b"),
-          keyCols)
-        .filter(col("__ida") < col("__idb"))
-        .select(col("__ida").as("id_a"), col("__idb").as("id_b"))
-        .distinct()
-    }
-    val blocked = withNblk(hotHead, slim, keyCols, hot, blockSize)
-      .withColumn("__blk",
-        pmod(xxhash64(col(idCol)), col("__nblk")).cast("int"))
-    // triangle replication: a row in block p serves as the LEFT side of
-    // block pairs (p, p..nblk-1) and the RIGHT side of (0..p, p)
-    val left = blocked
-      .withColumn("__br", explode(sequence(col("__blk"), col("__nblk") - 1)))
-      .select((keys ++ Seq(col("__blk").as("__bl"), col("__br"),
-        col(idCol).as("__ida"))): _*)
-    val right = blocked
-      .withColumn("__bl", explode(sequence(lit(0), col("__blk"))))
-      .select((keys ++ Seq(col("__bl"), col("__blk").as("__br"),
-        col(idCol).as("__idb"))): _*)
-    left.join(right, keyCols ++ Seq("__bl", "__br"))
-      // same-block pairs would otherwise surface in both orientations;
-      // requiring id order there halves the stream into distinct
-      .filter(col("__bl") =!= col("__br") || col("__ida") < col("__idb"))
-      .filter(col("__ida") =!= col("__idb"))
+    triangleSelfJoin(rows.select((keyCols.map(col) :+ col(idCol).as("__id")): _*),
+        keyCols, hotThreshold, blockSize)
       .select(least(col("__ida"), col("__idb")).as("id_a"),
         greatest(col("__ida"), col("__idb")).as("id_b"))
       .distinct()
@@ -199,8 +187,8 @@ object Skew {
     require(hotThreshold > 0 && blockSize > 0)
     val keys = keyCols.map(col)
     // cache the standing-index side: census + the block join would
-    // otherwise recompute its banding lineage twice (caller-managed
-    // cache convention, as in boundedSelfPairs)
+    // otherwise recompute its banding lineage twice (InternalCaches pin,
+    // released by the caller's drain)
     val r = InternalCaches.register(right.select((keys :+ col(idCol)): _*))
     val l = left.select((keys :+ col(idCol)): _*)
     val hot = r.groupBy(keys: _*).agg(count(lit(1)).as("__n"))
@@ -224,6 +212,28 @@ object Skew {
       .distinct()
   }
 
+  /** One row per (id, band): `__id`, the band vector `__bv`, the carry
+    * payload `__pl` (a struct of `carryCols`, or 0), band index `__j` and
+    * value `__band`. */
+  private def bandRows(wide: DataFrame, idCol: String, bandCols: Seq[String],
+                       carryCols: Seq[String]): DataFrame = {
+    val payload = if (carryCols.isEmpty) lit(0) else struct(carryCols.map(col): _*)
+    wide.select(col(idCol).as("__id"), array(bandCols.map(col): _*).as("__bv"),
+        payload.as("__pl"))
+      .select(col("__id"), col("__bv"), col("__pl"),
+        posexplode(col("__bv")).as(Seq("__j", "__band")))
+  }
+
+  /** A pair appearing in band `__j` survives only if no lower band of
+    * `__bva`/`__bvb` also matches — symmetric in the two sides, so
+    * orientation-safe. Literal-index array accesses + least() (null-
+    * skipping), NOT array higher-order functions: HOF lambdas are
+    * interpreted per row, and this runs once per generated candidate. */
+  private def firstMatch(numBands: Int): Column =
+    if (numBands == 1) lit(true)
+    else col("__j") === least((0 until numBands).map(j =>
+      when(col("__bva")(j) === col("__bvb")(j), lit(j))): _*)
+
   /** Candidate pairs from multi-band exact-match LSH over a WIDE band
     * frame (one row per id, one `bandCols` column per band value), with the
     * band vectors CARRIED through pair generation: the caller verifies
@@ -235,12 +245,14 @@ object Skew {
     * rather than a `distinct()`: a pair sharing m bands is generated in all
     * m band buckets, but only the bucket of the SMALLEST matching band
     * index emits it (each side sees both full vectors, so the test is a
-    * per-row filter). Combined with the triangle-block decomposition of hot
-    * buckets (identical to [[boundedSelfPairs]]) the whole generation is
-    * ONE shuffle — the bucket join — and per-task work stays ≤ ~blockSize²
-    * under degenerate band distributions. Output is exactly one row per
-    * unordered pair sharing ≥ 1 band: the same pair set as
-    * explode → boundedSelfPairs → distinct, minus the distinct's shuffle.
+    * per-row filter). Generation is the triangle-block self-join of
+    * [[boundedSelfPairs]] ([[triangleSelfJoin]]): one lazy plan, no cache
+    * and no driver action, two shuffles — the bucket-population window
+    * (planned once, reused by both join sides) and the block join — and
+    * per-task join work stays ≤ ~blockSize² under degenerate band
+    * distributions. Output is exactly one row per unordered pair sharing
+    * ≥ 1 band: the same pair set as explode → boundedSelfPairs → distinct,
+    * minus the distinct's shuffle.
     *
     * `wide` must hold one row per non-null `idCol`; band columns must
     * share one type (the exact-match bucket value — longs, md5 strings,
@@ -258,79 +270,20 @@ object Skew {
                            carryCols: Seq[String] = Nil): DataFrame = {
     require(bandCols.nonEmpty, "at least one band column")
     require(hotThreshold > 0 && blockSize > 0)
-    val payload =
-      if (carryCols.isEmpty) lit(0).as("__pl")
-      else struct(carryCols.map(col): _*).as("__pl")
-    val slim = InternalCaches.register(wide.select(col(idCol).as("__id"),
-      array(bandCols.map(col): _*).as("__bv"), payload))
-    val bands = slim.select(col("__id"), col("__bv"), col("__pl"),
-      posexplode(col("__bv")).as(Seq("__j", "__band")))
-    // a pair appearing in band j survives only if no band j' < j also
-    // matches — symmetric in the two sides, so orientation-safe. Built
-    // from literal-index array accesses + least() (null-skipping), NOT
-    // array higher-order functions: HOF lambdas are interpreted per row,
-    // and this predicate runs once per generated candidate
-    val firstMatch =
-      if (bandCols.length == 1) lit(true)
-      else col("__j") === least(bandCols.indices.map(j =>
-        when(col("__bva")(j) === col("__bvb")(j), lit(j))): _*)
+    // cross-block pairs surface once in either orientation: order them
+    def oriented(a: String, b: String, as: String): Column =
+      when(col("__ida") < col("__idb"), col(a)).otherwise(col(b)).as(as)
     val carried: Seq[Column] =
       if (carryCols.isEmpty) Nil
-      else Seq(
-        when(col("__ida") < col("__idb"), col("__pla")).otherwise(col("__plb"))
-          .as("carry_a"),
-        when(col("__ida") < col("__idb"), col("__plb")).otherwise(col("__pla"))
-          .as("carry_b"))
-    def oriented(df: DataFrame): DataFrame = df
-      .filter(col("__ida") =!= col("__idb"))
-      .filter(firstMatch)
-      .select(Seq(
-        when(col("__ida") < col("__idb"), col("__ida")).otherwise(col("__idb"))
-          .as("id_a"),
-        when(col("__ida") < col("__idb"), col("__idb")).otherwise(col("__ida"))
-          .as("id_b"),
-        when(col("__ida") < col("__idb"), col("__bva")).otherwise(col("__bvb"))
-          .as("bands_a"),
-        when(col("__ida") < col("__idb"), col("__bvb")).otherwise(col("__bva"))
-          .as("bands_b")) ++ carried: _*)
-    val hotDf = bands.groupBy(col("__j"), col("__band"))
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > hotThreshold)
-    // the census is an action either way (the empty check); collecting its
-    // head lets the COMMON cases skip join machinery entirely: no hot
-    // buckets → plain self-join, few hot buckets (a boilerplate flood is a
-    // handful of templates) → nblk arrives as a literal-map lookup instead
-    // of TWO broadcast hash joins (measured ~2.4× guard overhead on the
-    // skew stress twins, dominated by those extra plan nodes at small
-    // scale). Only a degenerate many-hot-bucket census pays the
-    // broadcast-join form.
-    val hotHead = censusHead(hotDf, Seq("__j", "__band"))
-    if (hotHead.isEmpty) {
-      // skew-free: plain bucket self-join, id order dedups orientation
-      return oriented(bands
-        .select(col("__j"), col("__band"), col("__id").as("__ida"),
-          col("__bv").as("__bva"), col("__pl").as("__pla"))
-        .join(bands.select(col("__j"), col("__band"), col("__id").as("__idb"),
-          col("__bv").as("__bvb"), col("__pl").as("__plb")),
-          Seq("__j", "__band"))
-        .filter(col("__ida") < col("__idb")))
-    }
-    val blocked = withNblk(hotHead, bands, Seq("__j", "__band"),
-        hotDf, blockSize)
-      .withColumn("__blk", pmod(xxhash64(col("__id")), col("__nblk")).cast("int"))
-    val left = blocked
-      .withColumn("__br", explode(sequence(col("__blk"), col("__nblk") - 1)))
-      .select(col("__j"), col("__band"), col("__blk").as("__bl"), col("__br"),
-        col("__id").as("__ida"), col("__bv").as("__bva"),
-        col("__pl").as("__pla"))
-    val right = blocked
-      .withColumn("__bl", explode(sequence(lit(0), col("__blk"))))
-      .select(col("__j"), col("__band"), col("__bl"), col("__blk").as("__br"),
-        col("__id").as("__idb"), col("__bv").as("__bvb"),
-        col("__pl").as("__plb"))
-    // cross-block pairs surface exactly once (lower block as the left
-    // side); same-block pairs in both orientations — id order keeps one
-    oriented(left.join(right, Seq("__j", "__band", "__bl", "__br"))
-      .filter(col("__bl") =!= col("__br") || col("__ida") < col("__idb")))
+      else Seq(oriented("__pla", "__plb", "carry_a"),
+        oriented("__plb", "__pla", "carry_b"))
+    triangleSelfJoin(bandRows(wide, idCol, bandCols, carryCols),
+        Seq("__j", "__band"), hotThreshold, blockSize)
+      .filter(firstMatch(bandCols.length))
+      .select(Seq(oriented("__ida", "__idb", "id_a"),
+        oriented("__idb", "__ida", "id_b"),
+        oriented("__bva", "__bvb", "bands_a"),
+        oriented("__bvb", "__bva", "bands_b")) ++ carried: _*)
   }
 
   /** [[boundedWideBandPairs]] BETWEEN two wide band frames over disjoint
@@ -348,20 +301,9 @@ object Skew {
                                   carryCols: Seq[String] = Nil): DataFrame = {
     require(bandCols.nonEmpty, "at least one band column")
     require(hotThreshold > 0 && blockSize > 0)
-    def payload =
-      if (carryCols.isEmpty) lit(0).as("__pl")
-      else struct(carryCols.map(col): _*).as("__pl")
-    def explodeBands(df: DataFrame) = df
-      .select(col(idCol).as("__id"), array(bandCols.map(col): _*).as("__bv"),
-        payload)
-      .select(col("__id"), col("__bv"), col("__pl"),
-        posexplode(col("__bv")).as(Seq("__j", "__band")))
-    val lb = explodeBands(left)
-    val rb = InternalCaches.register(explodeBands(right)) // census + join both read it
-    val firstMatch =
-      if (bandCols.length == 1) lit(true)
-      else col("__j") === least(bandCols.indices.map(j =>
-        when(col("__bva")(j) === col("__bvb")(j), lit(j))): _*)
+    val lb = bandRows(left, idCol, bandCols, carryCols)
+    // census + join both read it
+    val rb = InternalCaches.register(bandRows(right, idCol, bandCols, carryCols))
     val outCols = Seq(col("__ida").as("id_a"), col("__idb").as("id_b"),
       col("__bva").as("bands_a"), col("__bvb").as("bands_b")) ++
       (if (carryCols.isEmpty) Nil
@@ -374,13 +316,13 @@ object Skew {
     val r = rb.select(col("__j"), col("__band"), col("__id").as("__idb"),
       col("__bv").as("__bvb"), col("__pl").as("__plb"))
     if (hotHead.isEmpty)
-      return l.join(r, Seq("__j", "__band")).filter(firstMatch)
+      return l.join(r, Seq("__j", "__band")).filter(firstMatch(bandCols.length))
         .select(outCols: _*)
     val rblk = withNblk(hotHead, r, Seq("__j", "__band"), hot, blockSize)
       .withColumn("__b", pmod(xxhash64(col("__idb")), col("__nblk")).cast("int"))
     val lblk = withNblk(hotHead, l, Seq("__j", "__band"), hot, blockSize)
       .withColumn("__b", explode(sequence(lit(0), col("__nblk") - 1)))
-    lblk.join(rblk, Seq("__j", "__band", "__b")).filter(firstMatch)
+    lblk.join(rblk, Seq("__j", "__band", "__b")).filter(firstMatch(bandCols.length))
       .select(outCols: _*)
   }
 

@@ -53,8 +53,10 @@ object RestEndpoint {
   * default "id") and an epoch-seconds field (`tsField`, default
   * "created_utc" — the reference's cursor column). Every call re-lists
   * and re-reads, which is exactly what makes lines appended between
-  * micro-batches show up as "new API data" in tests. Local/test scale by
-  * design; a production endpoint implements [[RestEndpoint]] over HTTP. */
+  * micro-batches show up as "new API data" in tests. A line that is not
+  * JSON, lacks a non-null id, or whose ts is not an integer fails the read
+  * naming its file and line. Local/test scale by design; a production
+  * endpoint implements [[RestEndpoint]] over HTTP. */
 class JsonlEndpoint extends RestEndpoint {
   private var path: String = _
   private var tsField: String = "created_utc"
@@ -82,10 +84,21 @@ class JsonlEndpoint extends RestEndpoint {
       val lines =
         try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
         finally in.close()
-      lines.split('\n').iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        out += RestRecord(node.get(idField).asText(), node.get(tsField).asLong(), line)
-      }
+      lines.split('\n').iterator.map(_.trim).zipWithIndex
+        .filter(_._1.nonEmpty).foreach { case (line, i) =>
+          def bad(what: String): Nothing =
+            throw new IllegalArgumentException(s"graft-rest record $f:${i + 1}: $what")
+          val node =
+            try mapper.readTree(line)
+            catch { case e: java.io.IOException => bad(s"not JSON (${e.getMessage})") }
+          def field(name: String) = Option(node.get(name)).filterNot(_.isNull)
+            .getOrElse(bad(s"field '$name' is missing or null"))
+          // asLong() would read a non-integer ts as 0: reject it instead
+          val ts = field(tsField)
+          if (!ts.isIntegralNumber || !ts.canConvertToLong)
+            bad(s"field '$tsField' must be an integer, got $ts")
+          out += RestRecord(field(idField).asText(), ts.longValue(), line)
+        }
     }
     out
   }

@@ -44,10 +44,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Options: `endpoint` ([[RestEndpoint]] class name, default
   * [[JsonlEndpoint]] reading `path`), `startTs` (cursor start, default 0),
-  * `pageSize` (default 1000), `numPartitions` (default 4),
-  * `maxTsAdvancePerBatch` (default unbounded), `maxRetries` (default 3),
-  * `retryBaseMs` (default 50), plus endpoint-specific options
-  * (`path`, `tsField`, `idField`).
+  * `pageSize` (> 0, default 1000), `numPartitions` (> 0, default 4),
+  * `maxTsAdvancePerBatch` (> 0, default unbounded), `maxRetries` (≥ 1,
+  * default 3), `retryBaseMs` (≥ 0, default 50), plus endpoint-specific
+  * options (`path`, `tsField`, `idField`). A value out of range fails on
+  * the driver, naming the option.
   */
 class RestPageSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-rest"
@@ -88,16 +89,23 @@ private[v2] object RestConf {
       o.entrySet().forEach(e => b += (e.getKey.toLowerCase -> e.getValue))
       b.result()
     }
+    // checked here, on the driver: a bad value would otherwise fail inside
+    // a task (pageSize=0) or read nothing (numPartitions=0)
+    def num(name: String, default: Long, min: Long, max: Long = Long.MaxValue): Long =
+      opts.get(name.toLowerCase).fold(default) { v =>
+        v.toLongOption.filter(n => n >= min && n <= max).getOrElse(
+          throw new IllegalArgumentException(
+            s"graft-rest option $name must be an integer in [$min, $max], got '$v'"))
+      }
     RestConf(
       endpointClass = opts.getOrElse("endpoint", classOf[JsonlEndpoint].getName),
       options = opts,
-      startTs = opts.get("startts").map(_.toLong).getOrElse(0L),
-      pageSize = opts.get("pagesize").map(_.toInt).getOrElse(1000),
-      numPartitions = opts.get("numpartitions").map(_.toInt).getOrElse(4),
-      maxAdvance = opts.get("maxtsadvanceperbatch").map(_.toLong)
-        .getOrElse(Long.MaxValue),
-      maxRetries = opts.get("maxretries").map(_.toInt).getOrElse(3),
-      retryBaseMs = opts.get("retrybasems").map(_.toLong).getOrElse(50L))
+      startTs = num("startTs", 0L, Long.MinValue),
+      pageSize = num("pageSize", 1000, 1, Int.MaxValue).toInt,
+      numPartitions = num("numPartitions", 4, 1, Int.MaxValue).toInt,
+      maxAdvance = num("maxTsAdvancePerBatch", Long.MaxValue, 1),
+      maxRetries = num("maxRetries", 3, 1, Int.MaxValue).toInt,
+      retryBaseMs = num("retryBaseMs", 50, 0))
   }
 }
 

@@ -47,6 +47,52 @@ class RestSourceSpec extends SparkSpec {
     assert(got == ((1 to 7).map(i => s"g$i").toSet + "h1"))
   }
 
+  test("out-of-range options fail on the driver, naming the option") {
+    val dir = tmpDir("graft_rest_opts")
+    writeJsonl(dir, "a.jsonl", Seq(("o1", 1L, "x")))
+    for ((name, v) <- Seq("pageSize" -> "0", "pageSize" -> "ten",
+        "numPartitions" -> "0", "numPartitions" -> "-2", "maxRetries" -> "0",
+        "retryBaseMs" -> "-1", "maxTsAdvancePerBatch" -> "0",
+        "startTs" -> "1.5")) {
+      val e = intercept[IllegalArgumentException](
+        spark.read.format("graft-rest").option("path", dir.toString)
+          .option(name, v).load())
+      assert(e.getMessage.contains(s"option $name") &&
+        e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+    // the edges stay legal: one partition, one attempt, no backoff
+    val got = spark.read.format("graft-rest").option("path", dir.toString)
+      .option("pageSize", "1").option("numPartitions", "1")
+      .option("maxRetries", "1").option("retryBaseMs", "0")
+      .option("maxTsAdvancePerBatch", "1").load()
+      .select("id").as[String].collect()
+    assert(got.toSeq == Seq("o1"))
+  }
+
+  test("JsonlEndpoint rejects a bad record, naming file, line and field") {
+    val good = """{"id":"a","created_utc":1}"""
+    for ((bad, field) <- Seq(
+        """{"created_utc":2}""" -> "'id'",
+        """{"id":null,"created_utc":2}""" -> "'id'",
+        """{"id":"b"}""" -> "'created_utc'",
+        """{"id":"b","created_utc":null}""" -> "'created_utc'",
+        """{"id":"b","created_utc":"abc"}""" -> "'created_utc' must be an integer",
+        """{"id":"b","created_utc":2.5}""" -> "'created_utc' must be an integer",
+        """{"id":"b","created_utc":99999999999999999999}""" ->
+          "'created_utc' must be an integer",
+        """{"id":"b",""" -> "not JSON")) {
+      val dir = tmpDir("graft_rest_bad")
+      // line 2 is blank: line numbers count every line of the file
+      Files.write(dir.resolve("p.jsonl"),
+        s"$good\n\n$bad\n".getBytes(StandardCharsets.UTF_8))
+      val ep = new JsonlEndpoint
+      ep.init(Map("path" -> dir.toString))
+      val e = intercept[IllegalArgumentException](ep.maxTs(0L))
+      assert(e.getMessage.contains("p.jsonl:3") && e.getMessage.contains(field),
+        e.getMessage)
+    }
+  }
+
   test("page fetches retry with backoff (flaky endpoint heals)") {
     val dir = tmpDir("graft_rest_flaky")
     writeJsonl(dir, "a.jsonl", (1 to 4).map(i => (s"f$i", i.toLong, "x")))

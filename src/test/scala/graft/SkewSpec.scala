@@ -37,15 +37,12 @@ class SkewSpec extends SparkSpec {
   }
 
   test("boundedSelfPairs: adversarial string keys (embedded separator, null-adjacent shapes) stay exact and guarded") {
-    // The literal-map probe key and the census map key derive from ONE
-    // Catalyst expression (Skew.probeKey), so keys containing the ':'
-    // separator cannot make the driver-side map and the SQL lookup
-    // disagree. Two buckets whose concatenations COLLIDE under concat_ws
-    // — ("a:b", "c") and ("a", "b:c") both encode "a:b:c" — must still
-    // produce the exact pair set: every row of a bucket computes the same
-    // probe string, so nblk stays bucket-uniform (the invariant the
-    // triangle decomposition needs), and a collision only shares a block
-    // count between the two buckets.
+    // Multi-column string keys whose concat_ws encodings COLLIDE —
+    // ("a:b", "c") and ("a", "b:c") both encode "a:b:c" — must stay two
+    // buckets: the window count and the block join partition on the key
+    // columns themselves, so each hot bucket gets its own nblk (the
+    // bucket-uniform block count the triangle decomposition needs) and no
+    // pair crosses between them. The pair set must equal the naive join.
     val rows = ((1 to 60).map(i => (f"h$i%03d", "a:b", "c")) ++ // hot, collides with...
       (1 to 60).map(i => (f"k$i%03d", "a", "b:c")) ++           // ...this hot bucket
       (1 to 10).map(i => (f"c$i%03d", s"cold$i", "z")))         // cold singletons
