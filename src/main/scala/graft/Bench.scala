@@ -13,16 +13,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // local iteration: SPARK_GRAFT_BENCH_ONLY="x84_… x27_…" restricts the
+    // run (the driver never sets it → full catalog)
+    val ordered = SparkEntry.only(sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .fold(Set.empty[String])(_.split("\\s+").filter(_.nonEmpty).toSet)).toSeq.sortBy(_._1)
     val spark = GraftSession.local(32, shufflePartitions = Some(32))
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // local iteration: SPARK_GRAFT_BENCH_ONLY="x84_… x27_…" restricts the
-    // run (the driver never sets it → full catalog)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split("\\s+").toSet).getOrElse(Set.empty[String])
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only(n) }
     // Warmup pass: JIT + codegen-class + parquet-footer caches, so the
     // first timed query is not charged the session's cold-start.
     ordered.foreach { case (name, fn) =>

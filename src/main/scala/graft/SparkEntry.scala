@@ -22,6 +22,13 @@ object SparkEntry {
     CoreQueries.defs ++ ExtensionQueries.defs ++ CurationQueries.defs ++
       CorpusQueries.defs ++ TrainingQueries.defs
 
+  /** [[queries]] named in `names` (all when empty); unknown names fail. */
+  def only(names: Set[String]): Map[String, (SparkSession, String) => DataFrame] = {
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    queries.filter { case (n, _) => names.isEmpty || names(n) }
+  }
+
   def oracleSql: Map[String, String] =
     CoreQueries.oracle ++ ExtensionQueries.oracle ++ CurationQueries.oracle ++
       CorpusQueries.oracle ++ TrainingQueries.oracle

@@ -4,10 +4,14 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [query ...]"); sys.exit(2)
+    }
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run only the named queries (local iteration;
     // the driver always passes exactly two args → full run)
-    val only = args.drop(2).toSet
+    val subset = args.length > 2
+    val queries = SparkEntry.only(args.drop(2).toSet)
     val spark = GraftSession.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -15,9 +19,7 @@ object Verify {
     // because the catch block only printed to stderr. Record every failure
     // in errors.json next to the dumps and end with a loud tally.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -59,7 +61,7 @@ object Verify {
       // Exit nonzero only for explicit subset runs (local iteration); the
       // driver's full run still gets all green dumps + errors.json even if
       // one query regresses.
-      if (only.nonEmpty) { spark.stop(); sys.exit(1) }
+      if (subset) { spark.stop(); sys.exit(1) }
     }
     spark.stop()
   }

@@ -20,10 +20,20 @@ import org.apache.spark.sql.functions._
   * in its model the fact table's contestant_id IS the contestant_season id;
   * kept as-is for parity.)
   *
-  * Scale shape: the three pre-aggregations are partial-aggregated map-side
-  * before their shuffles; the join keys all hash-partition on the same id,
-  * so AQE coalesces into one exchange reuse; the ranking window shuffles
-  * once on season_id. Deterministic rank tiebreak added on the id (the
+  * Precondition: `contestant_season` is unique on `contestant_season_id`
+  * and `contestant` on `contestant_id` (their `Schemas.keys`, which
+  * `Runner.upsert` maintains). Every join then keys on `eps.contestant_id`
+  * with at most one match, so each input is read once: `eps` aggregates
+  * per contestant (`days_lasted` sums those sums; `max` ignores
+  * multiplicity); votes and team-1 immunity rows share one keyed
+  * aggregate whose sums stay null for a key with none of their rows; and
+  * placement ranks the aggregate ⋈ `cs` rows in place. An unmatched `cs`
+  * row has a null njury and sorts last, so leaving it out moves no
+  * placement; an aggregate row with no `cs` match sorts after the matched
+  * rows of the null season and gets none.
+  * Plan: two map-side-combined aggregate shuffles on the contestant id, one
+  * window shuffle on season_id that the GROUP BY reuses, and broadcasts of
+  * the small sides. Deterministic rank tiebreak added on the id (the
   * reference's ROW_NUMBER is nondeterministic under ties — declared engine
   * policy, SURVEY §7.4).
   */
@@ -36,51 +46,42 @@ object ContestantStats {
       vote: DataFrame,
       immunityChallenge: DataFrame): DataFrame = {
 
-    val eps = episodePerformanceStats
-
-    val perContestant = eps.groupBy(col("contestant_id"))
+    val perContestant = episodePerformanceStats.groupBy(col("contestant_id"))
       .agg(
         sum(col("number_of_days_spent_in_episode")).as("ndays"),
         coalesce(sum(col("number_of_jury_votes")), lit(-1.0)).as("njury"))
 
-    val ranked = contestantSeason.as("cs")
-      .join(perContestant.as("eps"),
-        col("cs.contestant_season_id") === col("eps.contestant_id"), "left")
-      .select(col("cs.contestant_season_id"), col("cs.season_id"),
-        col("njury"), col("ndays"))
-      .withColumn("placement",
-        row_number().over(Window.partitionBy(col("season_id"))
-          .orderBy(col("njury").desc_nulls_last, col("ndays").desc_nulls_last,
-            col("contestant_season_id"))).cast("long"))
-      .select(col("contestant_season_id"), col("placement"))
-
-    val votesAgg = vote.groupBy(col("voted_for_id"))
+    val votesAndWins = vote.select(col("voted_for_id").as("key"), lit(1L).as("vote"),
+        when(col("voted_for_id") === col("contestant_id"), 1).otherwise(0).as("self"),
+        lit(null).as("win_pct"))
+      .unionByName(immunityChallenge.filter(col("team") === 1).select(
+        col("contestant_id").as("key"), lit(null).as("vote"), lit(null).as("self"),
+        col("win_pct")))
+      .groupBy(col("key"))
       .agg(
-        count(lit(1)).as("votes_against"),
-        (sum(when(col("voted_for_id") === col("contestant_id"), 1).otherwise(0)) > 0)
-          .cast("int").as("medevac_quit"))
+        sum(col("vote")).as("votes_against"),
+        (sum(col("self")) > 0).cast("int").as("medevac_quit"),
+        sum(col("win_pct")).as("individual_wins"))
 
-    val icAgg = immunityChallenge.filter(col("team") === 1)
-      .groupBy(col("contestant_id"))
-      .agg(sum(col("win_pct")).as("individual_wins"))
-
-    eps.as("eps")
-      .join(contestantSeason.as("cs"),
-        col("cs.contestant_season_id") === col("eps.contestant_id"), "left")
-      .join(contestant.as("c"),
+    val cs = contestantSeason.select("contestant_season_id", "contestant_id", "season_id")
+    val matched = col("cs.contestant_season_id").isNotNull
+    perContestant.as("eps")
+      .join(votesAndWins.as("v"), col("eps.contestant_id") === col("v.key"), "left")
+      .join(cs.as("cs"), col("cs.contestant_season_id") === col("eps.contestant_id"), "left")
+      .withColumn("placement", when(matched,
+        row_number().over(Window.partitionBy(col("cs.season_id"))
+          .orderBy(matched.desc, col("njury").desc_nulls_last,
+            col("ndays").desc_nulls_last, col("cs.contestant_season_id"))).cast("long")))
+      .join(contestant.select("contestant_id", "first_name", "last_name").as("c"),
         col("cs.contestant_id") === col("c.contestant_id"), "left")
-      .join(votesAgg.as("v"), col("eps.contestant_id") === col("v.voted_for_id"), "left")
-      .join(icAgg.as("ic"), col("ic.contestant_id") === col("eps.contestant_id"), "left")
-      .join(ranked.as("r"),
-        col("r.contestant_season_id") === col("eps.contestant_id"), "left")
       .groupBy(col("cs.contestant_season_id"), col("c.first_name"),
         col("c.last_name"), col("cs.season_id"))
       .agg(
-        sum(col("eps.number_of_days_spent_in_episode")).as("days_lasted"),
-        max(col("v.medevac_quit")).as("quit"),
-        max(col("v.medevac_quit")).as("med_evac"),
-        max(col("v.votes_against")).as("votes_against"),
-        max(col("ic.individual_wins")).as("individual_wins"),
-        max(col("r.placement")).as("placement"))
+        sum(col("ndays")).as("days_lasted"),
+        max(col("medevac_quit")).as("quit"),
+        max(col("medevac_quit")).as("med_evac"),
+        max(col("votes_against")).as("votes_against"),
+        max(col("individual_wins")).as("individual_wins"),
+        max(col("placement")).as("placement"))
   }
 }

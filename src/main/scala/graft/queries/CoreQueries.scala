@@ -590,13 +590,10 @@ object CoreQueries {
       val ev = t(s, d, "events").select(col("event_id"),
         when(col("event_id") % 7 === 0, concat(lit("{broken"), col("props")))
           .otherwise(col("props")).as("props"))
-      val parsed = graft.sources.JsonIngest.parseWithQuarantine(ev, "props",
-        StructType(Seq(StructField("k", LongType))))
-      parsed.good
-        .select(col("event_id"), col("k"), lit("good").as("status"))
-        .unionByName(parsed.quarantine
-          .select(col("event_id"), lit(null).cast("long").as("k"),
-            lit("quarantined").as("status")))
+      // a quarantined record's fields are all null, so `k` needs no mask
+      graft.sources.JsonIngest.tagged(ev, "props", StructType(Seq(StructField("k", LongType))))
+        .select(col("event_id"), col("k"),
+          when(col("quarantined"), "quarantined").otherwise("good").as("status"))
     }),
 
     // ───── domain flagship: the reference's pull_agg_contestant_stats
@@ -1002,7 +999,7 @@ object CoreQueries {
           ON r.folder = l.folder AND r.dest_file = l.dest_file""",
     "q38_json_ingest" ->
       // quarantine requires a NON-NULL raw payload (a null input is not a
-      // parse failure — mirrors JsonIngest's `bad` predicate exactly)
+      // parse failure — mirrors JsonIngest's `quarantined` flag exactly)
       """WITH ev AS (SELECT event_id,
           CASE WHEN event_id % 7 = 0 THEN '{broken' || props ELSE props END AS props
           FROM events),

@@ -7,33 +7,37 @@ import org.apache.spark.sql.types.StructType
 /** Robust semi-structured ingestion (the reference's Pushshift JSON pull,
   * reddit/reddit_extract.py — API fields churn, payloads go malformed).
   *
-  * [[parseWithQuarantine]] splits a raw JSON string column into
-  *  - parsed rows (struct fields flattened, schema = the declared subset —
-  *    the `sync_with_remote` "schema is authority" stance applied at parse
-  *    time), and
-  *  - a quarantine frame carrying the raw payload of every record that
-  *    failed to parse, for replay after a schema fix.
-  * Nothing throws: bad records never kill the 100-TB batch, and the
-  * quarantine count is the data-quality metric (reference A5 gates).
+  * [[tagged]] parses a raw JSON string column once into the declared
+  * fields (schema = the declared subset — the `sync_with_remote` "schema is
+  * authority" stance applied at parse time) plus a `quarantined` flag, the
+  * one definition of a bad record. [[parseWithQuarantine]] filters it into
+  * parsed rows and a quarantine frame carrying the raw payload of every bad
+  * record, for replay after a schema fix; a caller that wants both in one
+  * pass reads the tagged form. Nothing throws: bad records never kill the
+  * 100-TB batch, and the quarantine count is the data-quality metric
+  * (reference A5 gates).
   */
 object JsonIngest {
 
   case class Parsed(good: DataFrame, quarantine: DataFrame)
 
+  /** `df`'s columns, `schema`'s fields (which must not repeat them) parsed
+    * from `jsonCol`, and `quarantined`: the payload is non-null but did not
+    * parse (from_json yields null) or gave only null fields. */
+  def tagged(df: DataFrame, jsonCol: String, schema: StructType): DataFrame = {
+    val p = col("__p")
+    val allNull = schema.fieldNames.map(f => p.getField(f).isNull).reduce(_ && _)
+    df.withColumn("__p", from_json(col(jsonCol), schema))
+      .select(df.columns.toIndexedSeq.map(col) ++ schema.fieldNames.map(f => p.getField(f).as(f)) :+
+        (col(jsonCol).isNotNull && (p.isNull || allNull)).as("quarantined"): _*)
+  }
+
   def parseWithQuarantine(df: DataFrame, jsonCol: String,
                           schema: StructType): Parsed = {
-    val parsed = df.withColumn("__p", from_json(col(jsonCol), schema))
-    // from_json yields null for unparseable input; a record is also junk
-    // when every extracted field is null but the raw string is non-null
-    val allNull = schema.fieldNames
-      .map(f => col("__p").getField(f).isNull)
-      .reduce(_ && _)
-    val bad = col(jsonCol).isNotNull && (col("__p").isNull || allNull)
-    val good = parsed.filter(!bad)
-      .select(df.columns.toIndexedSeq.filterNot(_ == jsonCol).map(col) ++
-        schema.fieldNames.map(f => col("__p").getField(f).as(f)): _*)
-    val quarantine = parsed.filter(bad)
-      .select(df.columns.toIndexedSeq.map(col): _*)
-    Parsed(good, quarantine)
+    val t = tagged(df, jsonCol, schema)
+    Parsed(
+      t.filter(!col("quarantined")).select(
+        (df.columns.filterNot(_ == jsonCol) ++ schema.fieldNames).toIndexedSeq.map(col): _*),
+      t.filter(col("quarantined")).select(df.columns.toIndexedSeq.map(col): _*))
   }
 }

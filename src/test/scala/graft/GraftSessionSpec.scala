@@ -33,4 +33,13 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_PARTS"), bad)
     }
   }
+
+  test("SparkEntry.only: the named queries, all for none, unknown names fail naming them") {
+    assert(SparkEntry.only(Set.empty).keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.only(Set("q29_contestant_stats", "x03_dedup_minhash")).keySet ==
+      Set("q29_contestant_stats", "x03_dedup_minhash"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.only(Set("q29_contestant_stats", "q29_contestant_stat", "x3")))
+    assert(e.getMessage.contains("unknown query names: q29_contestant_stat, x3"), e.getMessage)
+  }
 }

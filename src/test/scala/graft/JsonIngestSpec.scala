@@ -23,6 +23,24 @@ class JsonIngestSpec extends SparkSpec {
     assert(p.quarantine.select("id").as[Long].collect().toSet == Set(3L, 4L))
   }
 
+  test("tagged: one parse whose good and quarantined rows are parseWithQuarantine's frames") {
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("tag", StringType)))
+    val df = Seq[(Long, String)](
+      (1L, """{"k": 5, "tag": "a"}"""), (2L, """{"tag": "b"}"""),
+      (3L, """{broken"""), (4L, """{"other": 1}"""), (5L, null), (6L, ""),
+      (7L, """{"k": "nan"}"""), (8L, """[1, 2]"""))
+      .toDF("id", "raw")
+    val t = JsonIngest.tagged(df, "raw", schema)
+    assert(t.columns.toSeq == Seq("id", "raw", "k", "tag", "quarantined"))
+    val p = JsonIngest.parseWithQuarantine(df, "raw", schema)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+    assert(rows(t.filter(!$"quarantined").drop("raw", "quarantined")) == rows(p.good))
+    assert(rows(t.filter($"quarantined").select("id", "raw")) == rows(p.quarantine))
+    // a null payload is not a parse failure
+    assert(p.quarantine.select("id").as[Long].collect().sorted.toSeq == Seq(3L, 4L, 6L, 7L, 8L))
+  }
+
   test("profile computes null/distinct stats in one pass") {
     val df = Seq((Some(1), "a"), (None, "b"), (Some(1), "b")).toDF("x", "y")
     val stats = Profile.profile(df).map(s => s.column -> s).toMap

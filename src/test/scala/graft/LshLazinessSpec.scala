@@ -2,8 +2,6 @@ package graft
 
 import graft.dedup.Dedup
 import graft.ops.{InternalCaches, Skew}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -15,21 +13,6 @@ import org.apache.spark.sql.functions._
   * the upstream lineage once through a reused exchange. */
 class LshLazinessSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
-
-  /** Spark jobs started while `build` runs, and the frame it built. */
-  private def jobsDuring(build: => DataFrame): (Int, DataFrame) = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    drainListenerBus()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = build
-      drainListenerBus()
-      (jobs.get, df)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   private def assertLazy(what: String)(build: => DataFrame): DataFrame = {
     val pinned = InternalCaches.pinned

@@ -82,6 +82,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterEach {
     }
   }
 
+  /** Spark jobs started while `body` runs, and its result. */
+  def jobsDuring[A](body: => A): (Int, A) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      drainListenerBus()
+      (jobs.get, a)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** [[GraftSession.drainListenerBus]] on the shared session. Call INSIDE
     * a quietLoggers window when a deliberate failure path also echoes
     * through an async listener (ExecutionListenerBus, task-end abort
