@@ -1,5 +1,6 @@
 package graft
 
+import graft.tools.Probe
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark main: runs every SparkEntry query against
@@ -17,15 +18,13 @@ object Bench {
     // run (the driver never sets it → full catalog)
     val ordered = SparkEntry.only(sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .fold(Set.empty[String])(_.split("\\s+").filter(_.nonEmpty).toSet)).toSeq.sortBy(_._1)
-    val spark = GraftSession.local(32, shufflePartitions = Some(32))
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .getOrCreate()
+    val spark = GraftSession.local(32, shufflePartitions = Some(32),
+      autoBroadcastMb = Some(64)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup pass: JIT + codegen-class + parquet-footer caches, so the
     // first timed query is not charged the session's cold-start.
-    ordered.foreach { case (name, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+    ordered.foreach { case (_, fn) =>
+      try Probe.wall(fn(spark, sfDir)) catch { case _: Throwable => () }
     }
     // Two timed passes, report the per-query minimum — single-shot times
     // on a shared box vary ±30%; min-of-2 is the standard stabilizer.
@@ -37,13 +36,11 @@ object Bench {
     // position. A query that throws reports the -1 sentinel (and is
     // excluded from the total) instead of folding its abort time into a
     // silently-faster sum.
-    def timed(name: String)(df: => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { df.write.format("noop").mode("overwrite").save(); (System.nanoTime() - t0) / 1e9 }
+    def timed(name: String)(df: => DataFrame): Double =
+      try Probe.wall(df)
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
       }
-    }
     def timedPass(qs: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[(String, Double)] =
       qs.map { case (name, fn) => name -> timed(name)(fn(spark, sfDir)) }
     // drop caches the warmup populated (minhash/jaccard pin their
@@ -65,8 +62,7 @@ object Bench {
     val nDocs = Tables.load(spark, sfDir, "documents").count()
     val stress = SkewStress.queries(spark, nDocs, sfDir)
     stress.foreach { case (_, fn) =>
-      try fn().write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      try Probe.wall(fn()) catch { case _: Throwable => () }
     }
     def stressPass(): Map[String, Double] = stress.map { case (name, fn) =>
       graft.ops.InternalCaches.drainAll(spark)
@@ -75,7 +71,7 @@ object Bench {
     graft.ops.InternalCaches.drainAll(spark)
     // min-of-3 for the stress section (vs min-of-2 for the catalog): the
     // graded number here is a RATIO of two short runs, so its variance is
-    // roughly double a single timing's — SkewTune sweeps show the same
+    // roughly double a single timing's — `Probe skew` sweeps show the same
     // parameters spread 1.05–1.57× run-to-run at these sub-second sizes,
     // with the first pair in a session paying residual warmup. One extra
     // pass costs ~8 s and roughly halves the ratio spread.

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * chains.
   *
   * Shared by [[ScaleGateSpec]] (the build-failing ≤~linear tripwire in
-  * `sbt test`) and [[ScaleBench]] (the committed per-round artifact —
-  * r12 verdict #7) so the two can never drift apart on what "10×" means.
+  * `sbt test`) and `graft.tools.Probe scale` (the committed per-round
+  * artifact), which also share the timing ([[graft.tools.Probe.scaleRow]]),
+  * so the two can never drift apart on what "10×" means.
   * Row-count-stamped: a dir holding exactly 10× the source rows is
   * reused, anything else is rebuilt. */
 object ScaleFixture {

@@ -119,28 +119,30 @@ object SkewStress {
       Tables.load(spark, sfDir, "documents"), "doc_id", "text",
       shingleK = 3, numHashes = 12)))
 
-  /** The stress runs (three skew operators × {hot, uniform} + the
+  /** The stress runs (four skew operators × {hot, uniform} + the
     * signature-hash cost twins), sized from the corpus row count of the
-    * SF under bench. */
-  def queries(spark: SparkSession, n: Long,
-              sfDir: String): Seq[(String, () => DataFrame)] = {
+    * SF under bench. `hotThreshold`/`blockSize` set the x27, x84 and x49
+    * guards (x38 is agg + join and has none); `Probe skew` sweeps them. */
+  def queries(spark: SparkSession, n: Long, sfDir: String,
+              hotThreshold: Int = 512,
+              blockSize: Int = 512): Seq[(String, () => DataFrame)] = {
     val floodCap = math.min(n / 5, 2500L) // keep candidate volume bounded
     sigQueries(spark, sfDir) ++ Seq(
       "skew_x27_hot" -> (() => Dedup.minhashLshPairs(
         textCorpus(spark, n, skewed = true), "doc_id", "text",
-        hotThreshold = 512, blockSize = 512)),
+        hotThreshold = hotThreshold, blockSize = blockSize)),
       "skew_x27_uni" -> (() => Dedup.minhashLshPairs(
         textCorpus(spark, n, skewed = false), "doc_id", "text",
-        hotThreshold = 512, blockSize = 512)),
+        hotThreshold = hotThreshold, blockSize = blockSize)),
       "skew_x38_hot" -> (() => chunkDedup(textCorpus(spark, n, skewed = true))),
       "skew_x38_uni" -> (() => chunkDedup(textCorpus(spark, n, skewed = false))),
       "skew_x84_hot" -> (() => bandPairs(
-        bandWide(spark, n, skewed = true, floodCap), 512, 512)),
+        bandWide(spark, n, skewed = true, floodCap), hotThreshold, blockSize)),
       "skew_x84_uni" -> (() => bandPairs(
-        bandWide(spark, n, skewed = false, floodCap), 512, 512)),
+        bandWide(spark, n, skewed = false, floodCap), hotThreshold, blockSize)),
       "skew_x49_hot" -> (() => bandPairsBetween(
-        bandWide(spark, n, skewed = true, floodCap), 512, 512)),
+        bandWide(spark, n, skewed = true, floodCap), hotThreshold, blockSize)),
       "skew_x49_uni" -> (() => bandPairsBetween(
-        bandWide(spark, n, skewed = false, floodCap), 512, 512)))
+        bandWide(spark, n, skewed = false, floodCap), hotThreshold, blockSize)))
   }
 }

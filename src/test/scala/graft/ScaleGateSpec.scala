@@ -84,29 +84,15 @@ class ScaleGateSpec extends SparkSpec {
     // cross product or an unconditional query-cells broadcast lands here
     "x177_bitext_margin_ivf")
 
-  // fixture recipe hoisted to graft.ScaleFixture (r12 verdict #7): the
-  // committed ScaleBench artifact and this gate must measure the SAME 10×
+  // the committed `Probe scale 10` artifact and this gate measure the
+  // SAME 10×: one fixture (ScaleFixture) and one timing (Probe.scaleRow —
+  // warm, then min-of-2 drained walls through the noop sink)
   private def ensureFixture(): Unit =
     ScaleFixture.ensure(spark, sf01, fixtureDir)
 
-  /** Min-of-2 warm through the noop sink (Bench's methodology), caches
-    * drained between runs so each timing pays full computation. */
-  private def time(name: String, dir: String): Double = {
-    def once(): Double = {
-      graft.ops.InternalCaches.drainAll(spark)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    once() // warm: codegen + file listing
-    math.min(once(), once())
-  }
-
   private def measure(q: String): (String, Double, Double, Double) = {
-    val t01 = time(q, sf01)
-    val t1 = time(q, fixtureDir)
-    (q, t01, t1, t1 / (10 * t01))
+    val (t01, t1, r) = graft.tools.Probe.scaleRow(spark, q, sf01, fixtureDir, 10)
+    (q, t01, t1, r)
   }
 
   test("10x scale gate: heavy dedup/winnow/trainer chains stay ≤ ~linear from sf0.1 to sf1-synth") {

@@ -40,20 +40,6 @@ class SkewStressSpec extends SparkSpec {
     assert(md5.count() == xxh.count())
   }
 
-  test("SkewTune arguments: positive integers or a usage error") {
-    import graft.tools.SkewTune.parseArgs
-    assert(parseArgs(Nil) == Right((None, Seq((512, 512)))))
-    assert(parseArgs(Seq("2000", "64,32", "512,512")) ==
-      Right((Some(2000L), Seq((64, 32), (512, 512)))))
-    for (args <- Seq(Seq("0"), Seq("n"), Seq("-5"), Seq("100", "64"),
-        Seq("100", "64,0"), Seq("100", "64,32,8"), Seq("100", "a,b"),
-        Seq("100", "64,32", "64,"))) {
-      val err = parseArgs(args)
-      assert(err.isLeft && err.left.exists(e =>
-        e.contains(s"'${args.last}'") && e.contains("usage")), s"$args -> $err")
-    }
-  }
-
   test("skewed and uniform corpora have identical sizes and schema (fair twins)") {
     val hot = SkewStress.textCorpus(spark, 500, skewed = true)
     val uni = SkewStress.textCorpus(spark, 500, skewed = false)

@@ -81,11 +81,12 @@ drift = (sum(anchor_after.values()) / sum(anchor_before.values())
 
 
 def spark_anchor():
-    """Re-time the pinned anchors SPARK-side (graft.BenchSubset, min-of-2
-    warm — the full bench's own methodology) AFTER the DuckDB sweep. The
-    DuckDB-only anchor cannot indict a Spark-side-only slow session
-    (r10's actual failure mode); comparing these walls to the same
-    queries' walls inside the full bench run catches exactly that. The
+    """Re-time the pinned anchors SPARK-side (graft.tools.Probe time:
+    min-of-2 warm through the noop sink, in Bench's session and at its
+    64 MB broadcast threshold) AFTER the DuckDB sweep. The DuckDB-only
+    anchor cannot indict a Spark-side-only slow session (r10's actual
+    failure mode); comparing these walls to the same queries' walls
+    inside the full bench run catches exactly that. The
     subset runs in a fresh JVM, so its walls carry cold-JIT overhead the
     in-bench walls don't — the ratio is an indicator with a stable
     protocol across rounds, not an identity."""
@@ -94,7 +95,7 @@ def spark_anchor():
     # to an empty map so spark_drift reads n/a instead.
     try:
         r = subprocess.run(
-            ["sbt", "-batch", "runMain graft.BenchSubset " + " ".join(ANCHORS)],
+            ["sbt", "-batch", "runMain graft.tools.Probe time " + " ".join(ANCHORS)],
             cwd=repo_root, env=dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir),
             capture_output=True, text=True, timeout=1800)
     except (subprocess.TimeoutExpired, OSError):
@@ -111,14 +112,14 @@ def spark_anchor():
 
 
 def scale10x():
-    """Committed 10x-scale evidence (r12 verdict #7): graft.ScaleBench
-    times the gated heavy chains at sf0.1 and at the sf1-equivalent
+    """Committed 10x-scale evidence (r12 verdict #7): graft.tools.Probe
+    scale 10 times the gated heavy chains at sf0.1 and at the sf1-equivalent
     synthetic fixture in one session and prints one JSON line. Guarded
     like spark_anchor: a failure degrades to {} rather than losing the
     round's artifact."""
     try:
         r = subprocess.run(
-            ["sbt", "-batch", "runMain graft.ScaleBench"],
+            ["sbt", "-batch", "runMain graft.tools.Probe scale 10"],
             cwd=repo_root, env=dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir),
             capture_output=True, text=True, timeout=3600)
     except (subprocess.TimeoutExpired, OSError):
@@ -134,14 +135,14 @@ def scale10x():
 
 
 def decode_kernel():
-    """Multimodal ingest floor (r16 verdict #6): graft.tools.DecodeBench
+    """Multimodal ingest floor (r16 verdict #6): graft.tools.Probe decode
     times the pure-JVM image codecs (JPEG Huffman+IDCT, PNG inflate+
     unfilter) on the committed fixtures, single-threaded min-of-2 — the
     kernel-level number the catalog's decode queries can't expose at
     sf0.1 (their payloads are sub-KB text). Guarded like scale10x."""
     try:
         r = subprocess.run(
-            ["sbt", "-batch", "runMain graft.tools.DecodeBench"],
+            ["sbt", "-batch", "runMain graft.tools.Probe decode"],
             cwd=repo_root, capture_output=True, text=True, timeout=1800)
     except (subprocess.TimeoutExpired, OSError):
         return {}
@@ -168,7 +169,7 @@ if (len(spark_after) == len(ANCHORS)
 merged = {
     "round": rnd, "sf": sfdir,
     "protocol": "same-session: duckdb anchor -> spark -> duckdb -> "
-                "duckdb anchor -> spark anchor (fresh-JVM BenchSubset); "
+                "duckdb anchor -> spark anchor (fresh-JVM Probe time); "
                 "spark pass 2 in reversed catalog order",
     "spark_total_sec": spark.get("value"),
     "duckdb_total_sec": duck.get("total"),
