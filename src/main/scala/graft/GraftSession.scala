@@ -16,7 +16,11 @@ import org.apache.spark.sql.SparkSession
   *    guards — `try_element_at`, empty-string cast guards, scaled-long
   *    folds — are written against it);
   *  - AQE left enabled with skew-join handling (the runtime half of the
-  *    skew story; `ops.Skew` is the explicit half).
+  *    skew story; `ops.Skew` is the explicit half);
+  *  - parquet timestamps written as INT64 `TIMESTAMP_MICROS`, not Spark's
+  *    INT96 default (deprecated by the Parquet format and written without
+  *    statistics), so `domain.Runner` reads the watermark of the tables it
+  *    writes from their footers.
   *
   * Deliberately NOT set: `shuffle.partitions` / broadcast threshold —
   * those are deployment-sized knobs (local[32] wants 32; a 1000-executor
@@ -34,6 +38,7 @@ object GraftSession {
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val b1 = shufflePartitions.fold(b)(n =>
       b.config("spark.sql.shuffle.partitions", n))
     autoBroadcastMb.fold(b1)(mb =>
@@ -42,9 +47,14 @@ object GraftSession {
 
   /** Plain session for a tool main: `local[n]` with `n` = [[cpus]], UTC,
     * no UI; `shufflePartitions` defaults to `n`, the broadcast threshold
-    * to Spark's. */
+    * to Spark's. Logs at WARN: the log4j2 root level is lowered before the
+    * context starts, after Spark has installed its default log config
+    * (which would otherwise print its start-up INFO lines). */
   def local(defaultCpus: Int, shufflePartitions: Option[Int] = None,
             autoBroadcastMb: Option[Int] = None): SparkSession.Builder = {
+    SparkLog.init()
+    org.apache.logging.log4j.core.config.Configurator.setRootLevel(
+      org.apache.logging.log4j.Level.WARN)
     val n = cpus(defaultCpus)
     val b = SparkSession.builder().master(s"local[$n]")
       .config("spark.sql.shuffle.partitions", shufflePartitions.getOrElse(n).toLong)
@@ -52,6 +62,12 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
     autoBroadcastMb.fold(b)(mb =>
       b.config("spark.sql.autoBroadcastJoinThreshold", mb * 1024L * 1024L))
+  }
+
+  /** Spark's logging set-up, which runs once per JVM: with no log4j2
+    * config on the classpath it installs Spark's defaults (root INFO). */
+  private object SparkLog extends org.apache.spark.internal.Logging {
+    def init(): Unit = initializeLogIfNecessary(false): Unit
   }
 
   /** Block until the async listener bus has delivered every event posted

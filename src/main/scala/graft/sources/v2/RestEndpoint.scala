@@ -2,7 +2,8 @@ package graft.sources.v2
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
 /** Abstraction of a paginated, time-cursored REST endpoint — the S7 shape
@@ -51,16 +52,22 @@ object RestEndpoint {
 /** File-backed fixture endpoint: `path` is a JSONL file or a directory of
   * `*.jsonl` files, one JSON object per line with an id field (`idField`,
   * default "id") and an epoch-seconds field (`tsField`, default
-  * "created_utc" — the reference's cursor column). Every call re-lists
-  * and re-reads, which is exactly what makes lines appended between
-  * micro-batches show up as "new API data" in tests. A line that is not
-  * JSON, lacks a non-null id, or whose ts is not an integer fails the read
-  * naming its file and line. Local/test scale by design; a production
-  * endpoint implements [[RestEndpoint]] over HTTP. */
+  * "created_utc" — the reference's cursor column). Every call re-stats
+  * (re-lists a directory) and re-parses only a changed file set: the
+  * instance keeps its records sorted by (ts, id) with the version (path,
+  * length, mtime of every file) they were parsed from, so `maxTs` and
+  * `page` are lookups, and lines appended between micro-batches still show
+  * up as "new API data" in tests. A line that is not JSON, lacks a
+  * non-null id, or whose ts is not an integer fails the read naming its
+  * file and line. Local/test scale by design; a production endpoint
+  * implements [[RestEndpoint]] over HTTP. */
 class JsonlEndpoint extends RestEndpoint {
   private var path: String = _
   private var tsField: String = "created_utc"
   private var idField: String = "id"
+  private var version: Seq[(String, Long, Long)] = Nil
+  private var sorted: Array[RestRecord] = Array.empty
+  private var sortedTs: Array[Long] = Array.empty
 
   override def init(options: Map[String, String]): Unit = {
     path = options.getOrElse("path",
@@ -69,53 +76,71 @@ class JsonlEndpoint extends RestEndpoint {
     idField = options.getOrElse("idfield", idField)
   }
 
-  private def readAll(): ArrayBuffer[RestRecord] = {
-    val mapper = new ObjectMapper()
+  /** Re-stat the files; re-parse them all if any changed. */
+  private def refresh(): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(new Configuration())
-    val files: Seq[Path] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toIndexedSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".jsonl")).sortBy(_.getName)
-      else Seq(p)
+    val st = fs.getFileStatus(p)
+    val files: Seq[FileStatus] =
+      if (st.isDirectory)
+        fs.listStatus(p).toIndexedSeq
+          .filter(_.getPath.getName.endsWith(".jsonl")).sortBy(_.getPath.getName)
+      else Seq(st)
+    val v = files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    if (v != version) {
+      // a stable sort: equal (ts, id) keep their file and line order
+      sorted = files.flatMap(f => parse(fs, f.getPath)).sortBy(r => (r.ts, r.id)).toArray
+      sortedTs = sorted.map(_.ts)
+      version = v
+    }
+  }
+
+  /** The records of one file, in line order. */
+  protected def parse(fs: FileSystem, f: Path): Seq[RestRecord] = {
+    val mapper = new ObjectMapper()
+    val in = fs.open(f)
+    val lines =
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
     val out = ArrayBuffer.empty[RestRecord]
-    files.foreach { f =>
-      val in = fs.open(f)
-      val lines =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      lines.split('\n').iterator.map(_.trim).zipWithIndex
-        .filter(_._1.nonEmpty).foreach { case (line, i) =>
-          def bad(what: String): Nothing =
-            throw new IllegalArgumentException(s"graft-rest record $f:${i + 1}: $what")
-          val node =
-            try mapper.readTree(line)
-            catch { case e: java.io.IOException => bad(s"not JSON (${e.getMessage})") }
-          def field(name: String) = Option(node.get(name)).filterNot(_.isNull)
-            .getOrElse(bad(s"field '$name' is missing or null"))
-          // asLong() would read a non-integer ts as 0: reject it instead
-          val ts = field(tsField)
-          if (!ts.isIntegralNumber || !ts.canConvertToLong)
-            bad(s"field '$tsField' must be an integer, got $ts")
-          out += RestRecord(field(idField).asText(), ts.longValue(), line)
-        }
-    }
-    out
+    lines.split('\n').iterator.map(_.trim).zipWithIndex
+      .filter(_._1.nonEmpty).foreach { case (line, i) =>
+        def bad(what: String): Nothing =
+          throw new IllegalArgumentException(s"graft-rest record $f:${i + 1}: $what")
+        val node =
+          try mapper.readTree(line)
+          catch { case e: java.io.IOException => bad(s"not JSON (${e.getMessage})") }
+        def field(name: String) = Option(node.get(name)).filterNot(_.isNull)
+          .getOrElse(bad(s"field '$name' is missing or null"))
+        // asLong() would read a non-integer ts as 0: reject it instead
+        val ts = field(tsField)
+        if (!ts.isIntegralNumber || !ts.canConvertToLong)
+          bad(s"field '$tsField' must be an integer, got $ts")
+        out += RestRecord(field(idField).asText(), ts.longValue(), line)
+      }
+    out.toSeq
   }
 
-  override def maxTs(afterTs: Long): Option[Long] = {
-    val ts = readAll().iterator.map(_.ts).filter(_ > afterTs)
-    if (ts.isEmpty) None else Some(ts.max)
+  /** Index of the first sorted record with ts > `t`. */
+  private def after(t: Long): Int = {
+    var (lo, hi) = (0, sortedTs.length)
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (sortedTs(mid) <= t) lo = mid + 1 else hi = mid
+    }
+    lo
   }
 
-  override def page(afterTs: Long, beforeTs: Long, limit: Int): Seq[RestRecord] = {
-    val sorted = readAll().filter(r => r.ts > afterTs && r.ts <= beforeTs)
-      .sortBy(r => (r.ts, r.id))
-    if (sorted.length <= limit) sorted.toSeq
-    else {
-      // never split a ts group: extend past the limit to the run's end
-      val cut = sorted(limit - 1).ts
-      sorted.takeWhile(_.ts <= cut).toSeq
-    }
+  override def maxTs(afterTs: Long): Option[Long] = synchronized {
+    refresh()
+    sortedTs.lastOption.filter(_ > afterTs)
+  }
+
+  override def page(afterTs: Long, beforeTs: Long, limit: Int): Seq[RestRecord] = synchronized {
+    refresh()
+    val (from, to) = (after(afterTs), after(beforeTs))
+    // never split a ts group: extend past the limit to the run's end
+    val end = if (to - from <= limit) to else after(sortedTs(from + limit - 1))
+    ArraySeq.unsafeWrapArray(sorted.slice(from, end))
   }
 }

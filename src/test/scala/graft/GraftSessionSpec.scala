@@ -42,4 +42,15 @@ class GraftSessionSpec extends AnyFunSuite {
       SparkEntry.only(Set("q29_contestant_stats", "q29_contestant_stat", "x3")))
     assert(e.getMessage.contains("unknown query names: q29_contestant_stat, x3"), e.getMessage)
   }
+
+  test("local lowers the log4j2 root level to WARN before the context starts") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.config.Configurator
+    val prior = LogManager.getRootLogger.getLevel
+    Configurator.setRootLevel(Level.INFO)
+    try {
+      GraftSession.local(1)
+      assert(LogManager.getRootLogger.getLevel == Level.WARN)
+    } finally Configurator.setRootLevel(prior)
+  }
 }

@@ -93,6 +93,41 @@ class RestSourceSpec extends SparkSpec {
     }
   }
 
+  test("JsonlEndpoint sees lines appended to the same file between calls") {
+    val dir = tmpDir("graft_rest_append")
+    writeJsonl(dir, "a.jsonl", Seq(("r1", 1L, "a"), ("r2", 2L, "b"), ("r3", 3L, "c")))
+    val ep = new JsonlEndpoint
+    ep.init(Map("path" -> dir.resolve("a.jsonl").toString))
+    assert(ep.maxTs(0L).contains(3L))
+    assert(ep.maxTs(3L).isEmpty)
+    assert(ep.page(0L, 10L, 100).map(_.id) == Seq("r1", "r2", "r3"))
+    writeJsonl(dir, "a.jsonl", Seq(("r4", 4L, "d"), ("r0", 2L, "e")))
+    assert(ep.maxTs(3L).contains(4L))
+    assert(ep.page(0L, 10L, 100).map(_.id) == Seq("r1", "r0", "r2", "r3", "r4"))
+    // the limit falls inside the ts=2 run: the page extends to its end
+    assert(ep.page(0L, 10L, 2).map(_.id) == Seq("r1", "r0", "r2"))
+    assert(ep.page(2L, 3L, 100).map(_.id) == Seq("r3"))
+  }
+
+  test("one JsonlEndpoint parses an unchanged file once across maxTs and page calls") {
+    val dir = tmpDir("graft_rest_parse_once")
+    writeJsonl(dir, "a.jsonl", (1 to 100).map(i => (f"p$i%03d", i.toLong, "x")))
+    val ep = new CountingEndpoint
+    ep.init(Map("path" -> dir.resolve("a.jsonl").toString))
+    val end = ep.maxTs(0L).get
+    var (cursor, seen) = (0L, Seq.empty[String])
+    while (cursor < end) {
+      val got = ep.page(cursor, end, 10)
+      seen ++= got.map(_.id)
+      cursor = got.map(_.ts).max
+    }
+    assert(seen == (1 to 100).map(i => f"p$i%03d"))
+    assert(ep.parses.get == 1, "an unchanged file is parsed once")
+    writeJsonl(dir, "a.jsonl", Seq(("p101", 101L, "x")))
+    assert(ep.maxTs(end).contains(101L))
+    assert(ep.parses.get == 2)
+  }
+
   test("page fetches retry with backoff (flaky endpoint heals)") {
     val dir = tmpDir("graft_rest_flaky")
     writeJsonl(dir, "a.jsonl", (1 to 4).map(i => (s"f$i", i.toLong, "x")))
@@ -192,6 +227,16 @@ object FlakyEndpoint {
   val attempts = new AtomicInteger(0)
   val failAt = new AtomicInteger(0)
   def reset(failures: Int): Unit = { attempts.set(0); failAt.set(failures) }
+}
+
+/** Test endpoint: counts the files [[JsonlEndpoint]] parses. */
+class CountingEndpoint extends JsonlEndpoint {
+  val parses = new AtomicInteger(0)
+  override protected def parse(fs: org.apache.hadoop.fs.FileSystem,
+                               f: org.apache.hadoop.fs.Path): Seq[RestRecord] = {
+    parses.incrementAndGet()
+    super.parse(fs, f)
+  }
 }
 
 /** Cross-JVM-safe (single test JVM) row log for delivery assertions. */

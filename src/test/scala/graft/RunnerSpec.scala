@@ -170,4 +170,47 @@ class RunnerSpec extends SparkSpec with TimeLimits with AdaptiveSparkPlanHelper 
     assert(stored.schema.map(f => (f.name, f.dataType)) ==
       Schemas.of("season").map(f => (f.name, f.dataType)))
   }
+
+  test("a crash between the swap's two renames: the next Runner restores the table") {
+    val dir = Files.createTempDirectory("graft_runner_crash").toString
+    def rows(r: Runner) = r.state("season").select("season_id", "name", "showing_started")
+      .as[(Long, String, Timestamp)].collect().sortBy(_._1).toSeq
+    val r = new Runner(spark, dir)
+    r.upsert("season", Seq((1L, "Borneo", ts("2000-05-31 00:00:00")),
+      (2L, "Outback", ts("2001-01-28 00:00:00"))).toDF("season_id", "name", "showing_started"))
+    val before = rows(r)
+    val wm = r.watermark("season", "showing_started")
+    val batch = Seq((2L, "Australian Outback", ts("2001-01-28 00:00:00")),
+      (3L, "Africa", ts("2001-10-11 00:00:00"))).toDF("season_id", "name", "showing_started")
+
+    // the crash: `season` → `season__old` done, `season__tmp` → `season` not,
+    // and a stale `season__tmp` left behind
+    Files.move(java.nio.file.Paths.get(s"$dir/season"), java.nio.file.Paths.get(s"$dir/season__old"))
+    batch.write.parquet(s"$dir/season__tmp")
+
+    val fresh = new Runner(spark, dir)
+    assert(fresh.watermark("season", "showing_started") == wm)
+    assert(rows(fresh) == before)
+    assert(!new java.io.File(s"$dir/season__old").exists())
+
+    // replaying the interrupted batch gives the expected table, then is a no-op
+    val want = Seq((1L, "Borneo", ts("2000-05-31 00:00:00")),
+      (2L, "Australian Outback", ts("2001-01-28 00:00:00")),
+      (3L, "Africa", ts("2001-10-11 00:00:00")))
+    assert(fresh.upsert("season", batch) == 3)
+    assert(rows(fresh) == want)
+    assert(fresh.upsert("season", batch) == 3)
+    assert(rows(fresh) == want)
+    assert(new java.io.File(dir).list().sorted.toSeq == Seq("season"))
+  }
+
+  test("a leftover __old next to the table (crash after the second rename) is deleted") {
+    val dir = Files.createTempDirectory("graft_runner_leftover").toString
+    val r = new Runner(spark, dir)
+    r.upsert("season", Seq((1L, "Borneo")).toDF("season_id", "name"))
+    Seq((9L, "stale")).toDF("season_id", "name").write.parquet(s"$dir/season__old")
+    assert(new Runner(spark, dir).state("season").select("name").as[String].collect().toSeq ==
+      Seq("Borneo"))
+    assert(!new java.io.File(s"$dir/season__old").exists())
+  }
 }
